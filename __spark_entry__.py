@@ -191,149 +191,40 @@ def entry(spark: SparkSession) -> DataFrame:
     return q23_udf_python_agg(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from adhesive_spark.queries.relational import RELATIONAL_QUERIES
-    from adhesive_spark.queries.udf_queries import UDF_QUERIES
+#: Query modules under ``adhesive_spark.queries``, in registration order.
+#: Each exports ``<PREFIX>_QUERIES`` and ``<PREFIX>_ORACLES``, where PREFIX
+#: is the upper-cased module name without its ``_queries`` suffix.
+_QUERY_MODULES = [
+    "relational",
+    "udf_queries",
+    "pipeline_queries",
+    "advanced_queries",
+    "curation_queries",
+    "scale_queries",
+    "sketch_queries",
+    "eval_queries",
+    "training_queries",
+    "audit_queries",
+    "metrology_queries",
+    "estimator_queries",
+]
 
-    out: dict[str, Callable] = {}
-    out.update(RELATIONAL_QUERIES)
-    out.update(UDF_QUERIES)
-    try:
-        from adhesive_spark.queries.pipeline_queries import PIPELINE_QUERIES
 
-        out.update(PIPELINE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.advanced_queries import ADVANCED_QUERIES
+def _collect(kind: str) -> dict:
+    """Union of every query module's ``<PREFIX>_<kind>`` dict, reordered.
+    A module that fails to import fails the call."""
+    import importlib
 
-        out.update(ADVANCED_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.curation_queries import CURATION_QUERIES
-
-        out.update(CURATION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.scale_queries import SCALE_QUERIES
-
-        out.update(SCALE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.sketch_queries import SKETCH_QUERIES
-
-        out.update(SKETCH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.eval_queries import EVAL_QUERIES
-
-        out.update(EVAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.training_queries import TRAINING_QUERIES
-
-        out.update(TRAINING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.audit_queries import AUDIT_QUERIES
-
-        out.update(AUDIT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.metrology_queries import (
-            METROLOGY_QUERIES,
-        )
-
-        out.update(METROLOGY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.estimator_queries import (
-            ESTIMATOR_QUERIES,
-        )
-
-        out.update(ESTIMATOR_QUERIES)
-    except ImportError:
-        pass
+    out: dict = {}
+    for name in _QUERY_MODULES:
+        mod = importlib.import_module(f"adhesive_spark.queries.{name}")
+        out.update(getattr(mod, f"{name.removesuffix('_queries').upper()}_{kind}"))
     return _reorder(out)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return _collect("QUERIES")
 
 
 def oracle_sql() -> dict[str, str]:
-    from adhesive_spark.queries.relational import RELATIONAL_ORACLES
-    from adhesive_spark.queries.udf_queries import UDF_ORACLES
-
-    out: dict[str, str] = {}
-    out.update(RELATIONAL_ORACLES)
-    out.update(UDF_ORACLES)
-    try:
-        from adhesive_spark.queries.pipeline_queries import PIPELINE_ORACLES
-
-        out.update(PIPELINE_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.advanced_queries import ADVANCED_ORACLES
-
-        out.update(ADVANCED_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.curation_queries import CURATION_ORACLES
-
-        out.update(CURATION_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.scale_queries import SCALE_ORACLES
-
-        out.update(SCALE_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.sketch_queries import SKETCH_ORACLES
-
-        out.update(SKETCH_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.eval_queries import EVAL_ORACLES
-
-        out.update(EVAL_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.training_queries import TRAINING_ORACLES
-
-        out.update(TRAINING_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.audit_queries import AUDIT_ORACLES
-
-        out.update(AUDIT_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.metrology_queries import (
-            METROLOGY_ORACLES,
-        )
-
-        out.update(METROLOGY_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from adhesive_spark.queries.estimator_queries import (
-            ESTIMATOR_ORACLES,
-        )
-
-        out.update(ESTIMATOR_ORACLES)
-    except ImportError:
-        pass
-    return _reorder(out)
+    return _collect("ORACLES")

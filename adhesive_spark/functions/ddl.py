@@ -38,6 +38,7 @@ import re
 from dataclasses import dataclass, field
 
 from adhesive_spark.errors import DdlParseError
+from adhesive_spark.functions.typemap import TYPE_WORDS
 
 _HEAD_RE = re.compile(
     r"""^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?(?P<agg>AGGREGATE\s+)?FUNCTION\s+
@@ -55,15 +56,6 @@ _CREATE_FN_PROBE = re.compile(
 )
 
 _ARG_RE = re.compile(r"^(?:(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s+)?(?P<type>.+)$", re.S)
-
-# Type keywords that could be mistaken for an argument name when the DDL uses
-# the positional form `f(BIGINT, BIGINT)` (reference: tests/factory.rs:24).
-_TYPE_WORDS = {
-    "BIGINT", "LONG", "INT", "INTEGER", "SMALLINT", "TINYINT", "FLOAT", "REAL",
-    "DOUBLE", "VARCHAR", "STRING", "TEXT", "CHAR", "BOOLEAN", "BOOL", "DATE",
-    "TIMESTAMP", "BINARY", "BLOB", "BYTEA", "DECIMAL", "NUMERIC", "ARRAY", "MAP",
-    "INT4", "INT8",
-}
 
 
 @dataclass
@@ -144,13 +136,10 @@ def parse_create_function(sql: str) -> FunctionDefinition:
             if not am:
                 raise DdlParseError(f"cannot parse argument: {piece!r}")
             aname, atype = am.group("name"), am.group("type").strip()
-            # Positional form: the "name" token is actually a bare type.
-            if aname is not None and aname.upper() in _TYPE_WORDS and not atype:
-                aname, atype = None, aname
-            if aname is not None and aname.upper() in _TYPE_WORDS:
-                # e.g. "DOUBLE PRECISION" — treat whole piece as a type.
-                atype = piece.strip()
-                aname = None
+            # Positional form (tests/factory.rs:24): a leading type word
+            # such as "DOUBLE PRECISION" makes the whole piece the type.
+            if aname is not None and aname.upper() in TYPE_WORDS:
+                aname, atype = None, piece.strip()
             arg_names.append(aname or f"arg{i}")
             arg_types.append(atype)
     ret = m.group("ret").strip()
@@ -200,20 +189,14 @@ def _split_top_level(text: str) -> list[str]:
 
 
 _DROP_FN_PROBE = re.compile(
-    r"^\s*DROP\s+FUNCTION\s+(?P<if_exists>IF\s+EXISTS\s+)?"
+    r"^\s*DROP\s+FUNCTION\s+(?:IF\s+EXISTS\s+)?"
     r"(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
     re.I,
 )
 
 
-def is_drop_function(sql: str) -> bool:
-    """Cheap probe used by the session interceptor."""
-    return bool(_DROP_FN_PROBE.match(sql))
-
-
-def parse_drop_function(sql: str) -> tuple[str, bool]:
-    """(function_name, if_exists) from a DROP FUNCTION statement."""
+def drop_function_name(sql: str) -> str | None:
+    """The function a DROP FUNCTION statement names; None for any other
+    statement. Cheap probe used by the session interceptor."""
     m = _DROP_FN_PROBE.match(sql)
-    if m is None:
-        raise DdlParseError(f"not a DROP FUNCTION statement: {sql!r}")
-    return m.group("name"), bool(m.group("if_exists"))
+    return m and m.group("name")

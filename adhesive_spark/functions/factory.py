@@ -16,9 +16,11 @@ This is the PySpark-native rebuild of the reference's ``JvmFunctionFactory``
   (``useArrow=True``) is the same architecture over the executor↔worker
   Arrow IPC channel.
 - reference constructs ONE instance per CREATE and reuses it for every
-  batch (src/jvm.rs:93-102); our compiled function object is captured once
-  at registration and shipped to each worker (per-worker copy — a
-  documented semantic difference, SURVEY §7 risk 3).
+  batch (src/jvm.rs:93-102); we compile once per CREATE on the driver and
+  every Python worker keeps one copy per definition, reused by all of its
+  tasks (:class:`_PerWorker`), so a body's globals live once per worker
+  process — per-worker rather than global, a documented semantic
+  difference (SURVEY §7 risk 3).
 
 Languages:
 
@@ -48,16 +50,26 @@ Languages:
 
 from __future__ import annotations
 
+import decimal
+import hashlib
 import importlib
+import inspect
+import os
 import re
 import shutil
+import stat
+import subprocess
+import tempfile
 import textwrap
 import uuid
-from dataclasses import dataclass
+import zipfile
+from pathlib import Path
 from typing import Any, Callable
 
+import pyspark
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from adhesive_spark.errors import (
     CompileError,
@@ -71,11 +83,8 @@ from adhesive_spark.functions.ddl import (
 )
 from adhesive_spark.functions.typemap import sql_type_to_spark
 
-
-@dataclass
-class RegisteredFunction:
-    definition: FunctionDefinition
-    fn: Callable | None  # None for JVM-class / SQL-expression registrations
+#: Languages registered through the JVM (``registerJavaFunction``).
+_JVM_LANGUAGES = ("CLASS", "JAVA")
 
 
 def compile_python_body(
@@ -113,6 +122,40 @@ def compile_python_body(
     return ns[fn_name]
 
 
+#: Per Python worker: function name -> (definition id, compiled body) of
+#: the latest definition of that name the worker has run. Keyed by name so
+#: a replaced definition (and any state its globals hold) is released.
+_WORKER_BODIES: dict[str, tuple[str, Callable]] = {}
+
+
+def _worker_body(name: str, key: str, fn: Callable) -> Callable:
+    cached = _WORKER_BODIES.get(name)
+    if cached is None or cached[0] != key:
+        _WORKER_BODIES[name] = cached = (key, fn)
+    return cached[1]
+
+
+class _PerWorker:
+    """A compiled body that unpickles to its worker's cached copy.
+
+    Spark unpickles a UDF afresh for every task; this object reduces to
+    :func:`_worker_body`, so each task resolves the definition once to
+    the copy the worker's first task unpickled, and rows call that plain
+    function with no lookup. Driver-side calls go straight to ``fn``."""
+
+    def __init__(self, name: str, fn: Callable):
+        self.name = name
+        self.key = uuid.uuid4().hex
+        self.fn = fn
+        self.__signature__ = inspect.signature(fn)
+
+    def __call__(self, *args):
+        return self.fn(*args)
+
+    def __reduce__(self):
+        return _worker_body, (self.name, self.key, self.fn)
+
+
 def resolve_module_function(path: str) -> Callable[..., Any]:
     """Import ``pkg.mod.fn`` — the LANGUAGE CLASS lookup path analog
     (src/jvm.rs:63-109; unknown class tested at src/jvm.rs:303-314)."""
@@ -142,25 +185,13 @@ _CLASS_PATH_RE = re.compile(r"^[A-Za-z_$][\w$]*(\.[A-Za-z_$][\w$]*)*$")
 #: Same class-name extraction contract as the reference (src/util.rs:13-18).
 _JAVA_CLASS_NAME_RE = re.compile(r"class\s+(\w+)")
 
-#: Compiled-body cache: body text -> (fqn, jar_path). Identical source
-#: compiles to identical bytecode, so re-CREATE (or a re-run of the same
-#: DDL in a benchmark loop) skips javac entirely; the content-hash
-#: package mangling still isolates DIFFERENT bodies from each other. The
-#: reference holds one compiled instance per definition the same way
-#: (src/jvm.rs:93-102).  Backed by an on-disk jar cache keyed by the
-#: same content hash, so a FRESH process (e.g. the grader's bench run
-#: after its correctness run) also skips javac for a body any earlier
-#: process on the box compiled — the ~3 s javac cost is paid once per
-#: body per machine, not once per process.
-_JAVA_BODY_CACHE: dict[str, tuple[str, str]] = {}
-
 
 #: Resolved-once cache-dir handle (the ownership probes below stat the
 #: filesystem; no reason to repeat them per CREATE FUNCTION).
-_JAVA_DISK_CACHE: "Path | None" = None
+_JAVA_DISK_CACHE: Path | None = None
 
 
-def _java_disk_cache_dir() -> "Path":
+def _java_disk_cache_dir() -> Path:
     """Per-user jar cache directory, created 0700 and trust-checked.
 
     The cache feeds ``ADD JAR`` — code loaded straight into the Spark
@@ -181,11 +212,6 @@ def _java_disk_cache_dir() -> "Path":
     global _JAVA_DISK_CACHE
     if _JAVA_DISK_CACHE is not None:
         return _JAVA_DISK_CACHE
-    import os
-    import stat
-    import tempfile
-    from pathlib import Path
-
     uid = os.getuid() if hasattr(os, "getuid") else -1
     xdg = os.environ.get("XDG_CACHE_HOME")
     base = Path(xdg) if xdg else Path.home() / ".cache"
@@ -213,17 +239,15 @@ def _java_disk_cache_dir() -> "Path":
     return _JAVA_DISK_CACHE
 
 
-def _jar_sidecar(jar: "Path") -> "Path":
+def _jar_sidecar(jar: Path) -> Path:
     return jar.with_name(jar.name + ".sha256")
 
 
-def _jar_integrity_ok(jar: "Path") -> bool:
+def _jar_integrity_ok(jar: Path) -> bool:
     """True iff the cached jar's bytes match its published sha256
-    sidecar. A missing/short/mismatched sidecar reads as a cache MISS
-    (recompile + republish), never an error — integrity failures cost a
-    javac run, not a query."""
-    import hashlib
-
+    sidecar. A missing jar or a missing/short/mismatched sidecar reads as
+    a cache MISS (recompile + republish), never an error — integrity
+    failures cost a javac run, not a query."""
     try:
         expected = _jar_sidecar(jar).read_text().strip()
         if len(expected) != 64:
@@ -242,7 +266,7 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
       implements Spark's native ``org.apache.spark.sql.api.java.UDF1..22``
       — the Spark-idiomatic analog of ``extends Adhesive`` with a
       ``compute(Row)`` override (java/.../example/BasicExample.java:6-18);
-    - the class name is regex-extracted and a random generated package is
+    - the class name is regex-extracted and a generated package is
       prepended, so re-CREATE never collides (src/util.rs:20-36 parity);
     - compilation is the JDK's out-of-process ``javac`` against the
       session's own jars (the in-memory ``javax.tools`` compiler lives in
@@ -252,26 +276,15 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
       ``ADD JAR``, which registers it on the session classloader of every
       current and FUTURE executor — the cluster-correct load path.
 
+    Jars live in a content-addressed, integrity-checked cache
+    (``<Class>-p<digest12>.jar`` in :func:`_java_disk_cache_dir`):
+    identical source compiles to identical bytecode, so re-CREATE, a
+    benchmark loop or a fresh process on the same machine skips javac
+    for a body compiled before — the one-compiled-instance-per-definition
+    of the reference (src/jvm.rs:93-102).
+
     Returns the fully-qualified class name to register.
     """
-    import os
-    import subprocess
-    import tempfile
-    import zipfile
-    from pathlib import Path
-
-    import pyspark
-
-    cached = _JAVA_BODY_CACHE.get(body)
-    if cached is not None:
-        fqn, jar_path = cached
-        if Path(jar_path).exists():
-            # ADD JAR is idempotent per session and re-arms a fresh session
-            spark.sql(f"ADD JAR '{jar_path}'")
-            return fqn
-        # the cached jar was cleaned under us (e.g. /tmp sweep during a
-        # long-lived process) — recompile instead of a jar-not-found error
-        del _JAVA_BODY_CACHE[body]
     m = _JAVA_CLASS_NAME_RE.search(body)
     if m is None:
         # JavaCodeError("Can't find class name") parity (src/util.rs:25-27)
@@ -281,16 +294,19 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     # src/util.rs:20-36): different bodies still never collide, while the
     # identical body always maps to the identical FQN + jar — which is
     # what lets the compiled jar be reused across processes.
-    import hashlib
-
     digest = hashlib.sha256(body.encode()).hexdigest()[:12]
     pkg = f"adhesive.generated.p{digest}"
-    fqn = f"{pkg}.{cls}"
-    disk_jar = _java_disk_cache_dir() / f"{cls}-p{digest}.jar"
-    if disk_jar.exists() and _jar_integrity_ok(disk_jar):
-        spark.sql(f"ADD JAR '{disk_jar}'")
-        _JAVA_BODY_CACHE[body] = (fqn, str(disk_jar))
-        return fqn
+    jar = _java_disk_cache_dir() / f"{cls}-p{digest}.jar"
+    if not _jar_integrity_ok(jar):
+        _javac_publish(name, pkg, cls, body, jar)
+    # ADD JAR is idempotent per session and re-arms a fresh session
+    spark.sql(f"ADD JAR '{jar}'")
+    return f"{pkg}.{cls}"
+
+
+def _javac_publish(name: str, pkg: str, cls: str, body: str, jar: Path) -> None:
+    """Compile ``body`` as ``pkg.cls`` and publish it to the cache as ``jar``
+    plus its sha256 sidecar."""
     javac = shutil.which("javac")
     if javac is None:
         raise CompileError(
@@ -319,16 +335,16 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     # Spark keys added jars by BASENAME: two bodies that happen to use the
     # same class name must not both produce "<cls>.jar", or the second
     # ADD JAR fails ("Failed to add ... to Spark environment") and poisons
-    # later task deserialization — suffix with the mangled package id.
-    # Stage under a '.tmp-<pid>' name INSIDE the cache directory, then
-    # publish with an atomic same-directory rename (concurrent compiles
-    # of the same body converge on identical bytes, so last-writer-wins
-    # is safe). Staging in the javac workdir would make os.replace a
-    # cross-filesystem rename on tmpfs-/tmp boxes (the cache lives under
-    # $XDG_CACHE_HOME) and raise EXDEV; a dot-prefixed pid-unique name
-    # can never collide with a digest-keyed cache entry or another
-    # publisher.
-    stage_jar = disk_jar.with_name(f".tmp-{os.getpid()}-{disk_jar.name}")
+    # later task deserialization — hence the mangled package id in the
+    # name. Stage under a '.tmp-<pid>' name INSIDE the cache directory,
+    # then publish with an atomic same-directory rename (concurrent
+    # compiles of the same body converge on identical bytes, so
+    # last-writer-wins is safe). Staging in the javac workdir would make
+    # os.replace a cross-filesystem rename on tmpfs-/tmp boxes (the cache
+    # lives under $XDG_CACHE_HOME) and raise EXDEV; a dot-prefixed
+    # pid-unique name can never collide with a digest-keyed cache entry or
+    # another publisher.
+    stage_jar = jar.with_name(f".tmp-{os.getpid()}-{jar.name}")
     with zipfile.ZipFile(stage_jar, "w") as zf:
         for f in sorted(classes.rglob("*.class")):
             zf.write(f, f.relative_to(classes))
@@ -336,33 +352,31 @@ def compile_java_body(spark: SparkSession, name: str, body: str) -> str:
     # cache hit requires BOTH, so a half-published or corrupted entry
     # reads as a miss and recompiles instead of loading bad bytes.
     jar_sha = hashlib.sha256(stage_jar.read_bytes()).hexdigest()
-    os.replace(stage_jar, disk_jar)
-    stage_sha = disk_jar.with_name(f".tmp-{os.getpid()}-{disk_jar.name}.sha256")
+    os.replace(stage_jar, jar)
+    stage_sha = _jar_sidecar(stage_jar)
     stage_sha.write_text(jar_sha)
-    os.replace(stage_sha, _jar_sidecar(disk_jar))
-    spark.sql(f"ADD JAR '{disk_jar}'")
-    _JAVA_BODY_CACHE[body] = (fqn, str(disk_jar))
-    return fqn
+    os.replace(stage_sha, _jar_sidecar(jar))
+
+
+#: Python type each strict-checked Spark type accepts; other types
+#: (dates, timestamps, binary, arrays, maps) are not checked.
+_STRICT_PY_TYPES: dict[type, type] = {
+    T.FloatType: float,
+    T.DoubleType: float,
+    T.StringType: str,
+    T.BooleanType: bool,
+    T.DecimalType: decimal.Decimal,
+}
 
 
 def _strict_checker(sql_type: str):
     """Value predicate for one declared arg type, or None if the type is
     outside the strict matrix (then it's not checked)."""
-    base = re.split(r"[\s(<]", sql_type.strip(), maxsplit=1)[0].upper()
-    if base in ("BIGINT", "LONG", "INT", "INTEGER", "SMALLINT", "TINYINT",
-                "INT4", "INT8"):
+    t = sql_type_to_spark(sql_type)
+    if isinstance(t, T.IntegralType):
         return lambda v: isinstance(v, int) and not isinstance(v, bool)
-    if base in ("DOUBLE", "FLOAT", "REAL"):
-        return lambda v: isinstance(v, float)
-    if base in ("VARCHAR", "STRING", "TEXT", "CHAR"):
-        return lambda v: isinstance(v, str)
-    if base in ("BOOLEAN", "BOOL"):
-        return lambda v: isinstance(v, bool)
-    if base in ("DECIMAL", "NUMERIC"):
-        import decimal
-
-        return lambda v: isinstance(v, decimal.Decimal)
-    return None
+    py = _STRICT_PY_TYPES.get(type(t))
+    return None if py is None else (lambda v: isinstance(v, py))
 
 
 def strict_wrap(name: str, fn: Callable, arg_types: list[str]) -> Callable:
@@ -412,162 +426,131 @@ def _strict_wrap_series(name: str, fn: Callable, arg_types: list[str]) -> Callab
     return wrapper
 
 
+def _check_definition(d: FunctionDefinition) -> T.DataType | None:
+    """Validate every declared type (exact-signature spirit,
+    src/fusion.rs:72) and the language each function kind accepts;
+    returns the Spark return type (None for RETURNS TABLE)."""
+    if d.returns_table:
+        # the return "type" is an output column list: validate each
+        # column's type instead of the whole
+        for piece in _split_cols(d.return_type):
+            sql_type_to_spark(piece.split(None, 1)[-1])
+        ret_type = None
+    else:
+        ret_type = sql_type_to_spark(d.return_type)
+    for t in d.arg_types:
+        sql_type_to_spark(t)
+    lang = d.language
+    if d.returns_table and d.aggregate:
+        rule = "a function cannot be both AGGREGATE and RETURNS TABLE"
+    elif d.returns_table and lang != "PYTHON":
+        rule = (
+            "RETURNS TABLE requires LANGUAGE PYTHON (the body yields output "
+            "rows as tuples)"
+        )
+    elif d.strict and lang not in ("PYTHON", "PANDAS", "MODULE"):
+        rule = (
+            "STRICT (exact-signature enforcement) is only supported for "
+            "LANGUAGE PYTHON/PANDAS/MODULE — JVM-class and SQL-macro "
+            "registrations resolve inside Catalyst, which applies its own "
+            "coercion rules"
+        )
+    elif d.aggregate and lang != "PANDAS":
+        rule = (
+            "CREATE AGGREGATE FUNCTION requires LANGUAGE PANDAS (the body "
+            "receives pandas.Series per group and returns one scalar)"
+        )
+    elif lang not in ("PYTHON", "PANDAS", "MODULE", "SQL", *_JVM_LANGUAGES):
+        rule = f"unsupported LANGUAGE {lang!r}"
+    else:
+        return ret_type
+    raise DdlParseError(rule)
+
+
+def _jvm_impl_name(name: str) -> str:
+    """Spark name of a JVM function's implementation; the declared name is
+    a SQL wrapper over it (see :meth:`FunctionFactory._register_jvm`)."""
+    return f"__adh_{name}_impl"
+
+
 class FunctionFactory:
     """Session-scoped factory — the ``FunctionFactory`` hook analog
     (src/fusion.rs:23-27 ``FunctionFactory::create``)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.registry: dict[str, RegisteredFunction] = {}
+        self.registry: dict[str, FunctionDefinition] = {}
 
     def create_function(self, sql: str) -> None:
         d = parse_create_function(sql)
-        if d.name in self.registry and not d.or_replace:
+        prev = self.registry.get(d.name)
+        if prev is not None and not d.or_replace:
             raise DdlParseError(
                 f"function {d.name!r} already exists (use CREATE OR REPLACE)"
             )
+        ret_type = _check_definition(d)
         lang = d.language
-        if d.returns_table:
-            # RETURNS TABLE — the return "type" is an output column
-            # list; validate each column's type instead of the whole
-            for piece in _split_cols(d.return_type):
-                sql_type_to_spark(piece.strip().split(None, 1)[-1])
-            ret_type = None
-        else:
-            ret_type = sql_type_to_spark(d.return_type)
-        # Validate arg types eagerly — exact-signature spirit (src/fusion.rs:72).
-        for t in d.arg_types:
-            sql_type_to_spark(t)
-        if d.returns_table:
-            if d.aggregate:
-                raise DdlParseError(
-                    "a function cannot be both AGGREGATE and RETURNS TABLE"
-                )
-            if lang != "PYTHON":
-                raise DdlParseError(
-                    "RETURNS TABLE requires LANGUAGE PYTHON (the body "
-                    "yields output rows as tuples)"
-                )
-            fn = compile_python_body(d.name, d.arg_names, d.body)
-            self._register_udtf(d, fn)
-            self.registry[d.name] = RegisteredFunction(definition=d, fn=fn)
-            return
-
-        fn: Callable | None = None
-        if d.strict and lang not in ("PYTHON", "PANDAS", "MODULE"):
-            raise DdlParseError(
-                "STRICT (exact-signature enforcement) is only supported for "
-                "LANGUAGE PYTHON/PANDAS/MODULE — JVM-class and SQL-macro "
-                "registrations resolve inside Catalyst, which applies its "
-                "own coercion rules"
-            )
-        if d.aggregate:
-            # CREATE AGGREGATE FUNCTION — factory-surface extension
-            # beyond the reference (whose factory is scalar-only,
-            # src/fusion.rs:78): the body sees pandas.Series per group
-            # and returns one scalar, registered as a GROUPED_AGG
-            # pandas UDF (a real Catalyst aggregate with partial
-            # application over Arrow batches).
-            if lang != "PANDAS":
-                raise DdlParseError(
-                    "CREATE AGGREGATE FUNCTION requires LANGUAGE PANDAS "
-                    "(the body receives pandas.Series per group and "
-                    "returns one scalar)"
-                )
-            fn = compile_python_body(d.name, d.arg_names, d.body)
-            self._register_pandas_agg(d, fn, ret_type)
-        elif lang == "PYTHON":
-            fn = compile_python_body(d.name, d.arg_names, d.body)
-            self._register_python(d, fn, ret_type, vectorized=False)
-        elif lang == "PANDAS":
-            fn = compile_python_body(d.name, d.arg_names, d.body)
-            self._register_python(d, fn, ret_type, vectorized=True)
+        fn = None
+        if lang in ("PYTHON", "PANDAS"):
+            fn = _PerWorker(d.name, compile_python_body(d.name, d.arg_names, d.body))
         elif lang == "MODULE":
             fn = resolve_module_function(d.body.strip())
-            self._register_python(d, fn, ret_type, vectorized=False)
-        elif lang in ("CLASS", "JAVA"):
-            body = d.body.strip()
-            if _CLASS_PATH_RE.match(body):
-                # a bare FQN: the class must already be loadable
-                # (src/fusion.rs:45-50, the LANGUAGE CLASS path)
-                target = body
-            else:
-                # inline Java source — the reference's flagship path
-                # (src/fusion.rs:39-44, tests/factory.rs:23-51): compile at
-                # DDL time and load into the running session
-                target = compile_java_body(self.spark, d.name, body)
-            # registerJavaFunction takes only the RETURN type — Spark
-            # hands the UDFn whatever type the call site has, so a
-            # BIGINT-declared arg called with an INT literal would reach
-            # UDF2<Long,..> as an Integer and ClassCastException at run
-            # time.  The reference coerces calls to the declared exact
-            # signature (Signature::exact, src/fusion.rs:72), so: register
-            # the JVM impl under a mangled name and expose the declared
-            # name as a Catalyst-native SQL wrapper that CASTs each arg —
-            # inlined + codegen'd, zero overhead.
-            impl = f"__adh_{d.name}_impl_{uuid.uuid4().hex[:8]}"
-            try:
-                self.spark.udf.registerJavaFunction(impl, target, ret_type)
-            except Exception as e:  # Py4J wraps ClassNotFound etc.
-                raise UnknownFunctionError(
-                    f"cannot register JVM class {target!r}: {e}"
-                ) from e
-            args = ", ".join(
-                f"{n} {t}" for n, t in zip(d.arg_names, d.arg_types)
-            )
-            casts = ", ".join(
-                f"CAST({n} AS {t})"
-                for n, t in zip(d.arg_names, d.arg_types)
-            )
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {d.name}({args}) "
-                f"RETURNS {d.return_type} RETURN {impl}({casts})"
-            )
+        if d.returns_table:
+            self._register_udtf(d, fn)
+        elif fn is not None:
+            self._register_udf(d, fn, ret_type)
         elif lang == "SQL":
-            self._register_sql_macro(d)
+            self._register_sql(d, d.body)
         else:
-            raise DdlParseError(f"unsupported LANGUAGE {lang!r}")
-        self.registry[d.name] = RegisteredFunction(definition=d, fn=fn)
+            self._register_jvm(d, ret_type)
+        if prev is not None and prev.language in _JVM_LANGUAGES:
+            if lang not in _JVM_LANGUAGES:  # nothing overwrote the impl
+                self._drop_jvm_impl(d.name)
+        self.registry[d.name] = d
 
-    def drop_function(self, name: str, *, if_exists: bool = False) -> None:
-        """DROP FUNCTION [IF EXISTS] name — the lifecycle complement of
-        the CREATE path: removes the registry entry and Spark's temporary
-        function registration, so a later call fails resolution and a
-        plain re-CREATE (no OR REPLACE) succeeds again."""
-        if name not in self.registry:
-            if if_exists:
-                return
+    def drop_function(self, name: str) -> None:
+        """DROP FUNCTION name — the lifecycle complement of
+        the CREATE path: removes Spark's temporary function registration
+        (and a JVM function's implementation) and the registry entry, so
+        a later call fails resolution and a plain re-CREATE (no OR
+        REPLACE) succeeds again."""
+        d = self.registry.get(name)
+        if d is None:
             raise UnknownFunctionError(f"function {name!r} does not exist")
+        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+        if d.language in _JVM_LANGUAGES:
+            self._drop_jvm_impl(name)
         del self.registry[name]
-        try:
-            self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
-        except Exception:
-            # SQL-macro registrations drop via the same statement; UDF
-            # registrations may predate Spark's temp-function catalog —
-            # the registry removal above is the source of truth
-            pass
 
-    def _register_python(
-        self,
-        d: FunctionDefinition,
-        fn: Callable,
-        ret_type,
-        *,
-        vectorized: bool,
+    def _drop_jvm_impl(self, name: str) -> None:
+        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {_jvm_impl_name(name)}")
+
+    def _register_udf(
+        self, d: FunctionDefinition, fn: Callable, ret_type: T.DataType
     ) -> None:
+        """Scalar PYTHON/MODULE (rows), PANDAS (Series) and AGGREGATE
+        PANDAS (Series per group) bodies."""
+        vectorized = d.language == "PANDAS"
         if d.strict:
-            fn = (
-                _strict_wrap_series(d.name, fn, d.arg_types)
-                if vectorized
-                else strict_wrap(d.name, fn, d.arg_types)
-            )
-        if vectorized:
+            wrap = _strict_wrap_series if vectorized else strict_wrap
+            fn = wrap(d.name, fn, d.arg_types)
+        if d.aggregate:
+            # CREATE AGGREGATE FUNCTION — factory-surface extension beyond
+            # the reference (whose factory is scalar-only,
+            # src/fusion.rs:78): a GROUPED_AGG pandas UDF, a real Catalyst
+            # aggregate with partial application over Arrow batches. No
+            # volatile default here: Catalyst REJECTS nondeterministic
+            # expressions inside Aggregate nodes — the only place an
+            # aggregate can appear — so AGGREGATE definitions are always
+            # deterministic (documented deviation from the scalar default).
+            udf = F.pandas_udf(fn, ret_type, F.PandasUDFType.GROUPED_AGG)
+        elif vectorized:
             udf = F.pandas_udf(fn, returnType=ret_type)
         else:
             # useArrow → Arrow-batched transport, the analog of the
             # reference's zero-copy C-FFI batches (src/jvm.rs:183-219).
             udf = F.udf(fn, returnType=ret_type, useArrow=True)
-        if not d.deterministic:
+        if not (d.deterministic or d.aggregate):
             # Volatility::Volatile parity (src/fusion.rs:72): Catalyst must
             # not constant-fold or CSE calls.
             udf = udf.asNondeterministic()
@@ -593,30 +576,49 @@ class FunctionFactory:
         u = udtf(cls, returnType=d.return_type)
         self.spark.udtf.register(d.name, u)
 
-    def _register_pandas_agg(
-        self, d: FunctionDefinition, fn: Callable, ret_type
-    ) -> None:
-        if d.strict:
-            fn = _strict_wrap_series(d.name, fn, d.arg_types)
-        udf = F.pandas_udf(fn, ret_type, F.PandasUDFType.GROUPED_AGG)
-        # No volatile default here: Catalyst REJECTS nondeterministic
-        # expressions inside Aggregate nodes — the only place an
-        # aggregate can appear — so AGGREGATE definitions are always
-        # deterministic (documented deviation from the scalar default).
-        self.spark.udf.register(d.name, udf)
-
-    def _register_sql_macro(self, d: FunctionDefinition) -> None:
-        """LANGUAGE SQL — registered through Spark's own CREATE FUNCTION
-        (SQL-body UDFs are Catalyst-native in Spark 3.5+/4.x: inlined into
-        the plan, fully codegen'd)."""
-        args = ", ".join(
-            f"{n} {t}" for n, t in zip(d.arg_names, d.arg_types)
-        )
-        stmt = (
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {d.name}({args}) "
-            f"RETURNS {d.return_type} RETURN {d.body}"
-        )
+    def _register_jvm(self, d: FunctionDefinition, ret_type: T.DataType) -> None:
+        """LANGUAGE CLASS / JAVA: a bare FQN must already be loadable
+        (src/fusion.rs:45-50); inline Java source is compiled at DDL time
+        and loaded into the running session — the reference's flagship
+        path (src/fusion.rs:39-44, tests/factory.rs:23-51)."""
+        body = d.body.strip()
+        if _CLASS_PATH_RE.match(body):
+            target = body
+        else:
+            target = compile_java_body(self.spark, d.name, body)
+        # registerJavaFunction takes only the RETURN type — Spark hands the
+        # UDFn whatever type the call site has, so a BIGINT-declared arg
+        # called with an INT literal would reach UDF2<Long,..> as an
+        # Integer and ClassCastException at run time.  The reference
+        # coerces calls to the declared exact signature (Signature::exact,
+        # src/fusion.rs:72), so: register the JVM impl under a name derived
+        # from the function's (OR REPLACE overwrites it, DROP removes it)
+        # and expose the declared name as a Catalyst-native SQL wrapper
+        # that CASTs each arg — inlined + codegen'd, zero overhead.
+        impl = _jvm_impl_name(d.name)
         try:
-            self.spark.sql(stmt)
+            self.spark.udf.registerJavaFunction(impl, target, ret_type)
+        except Exception as e:  # Py4J wraps ClassNotFound etc.
+            raise UnknownFunctionError(
+                f"cannot register JVM class {target!r}: {e}"
+            ) from e
+        casts = ", ".join(
+            f"CAST({n} AS {t})" for n, t in zip(d.arg_names, d.arg_types)
+        )
+        self._register_sql(d, f"{impl}({casts})")
+
+    def _register_sql(self, d: FunctionDefinition, expr: str) -> None:
+        """Register ``d.name`` as Spark's own SQL function returning
+        ``expr`` (SQL-body UDFs are Catalyst-native in Spark 3.5+/4.x:
+        inlined into the plan, fully codegen'd) — LANGUAGE SQL bodies and
+        the JVM CAST wrappers."""
+        args = ", ".join(f"{n} {t}" for n, t in zip(d.arg_names, d.arg_types))
+        try:
+            self.spark.sql(
+                f"CREATE OR REPLACE TEMPORARY FUNCTION {d.name}({args}) "
+                f"RETURNS {d.return_type} RETURN {expr}"
+            )
         except Exception as e:
-            raise CompileError(f"Can't compile SQL function {d.name!r}: {e}") from e
+            raise CompileError(
+                f"Can't compile {d.language} function {d.name!r}: {e}"
+            ) from e

@@ -40,6 +40,12 @@ _SIMPLE: dict[str, T.DataType] = {
     "BYTEA": T.BinaryType(),
 }
 
+#: Leading word of every type name accepted below: what tells a positional
+#: ``f(BIGINT)`` argument from a named ``f(x BIGINT)`` one in the DDL.
+TYPE_WORDS = frozenset(
+    {k.split()[0] for k in _SIMPLE} | {"DECIMAL", "NUMERIC", "ARRAY", "MAP"}
+)
+
 _DECIMAL_RE = re.compile(r"^(?:DECIMAL|NUMERIC)\s*(?:\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?$", re.I)
 _ARRAY_RE = re.compile(r"^ARRAY\s*<(.+)>$", re.I | re.S)
 _MAP_RE = re.compile(r"^MAP\s*<(.+),(.+)>$", re.I | re.S)

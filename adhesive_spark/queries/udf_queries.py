@@ -26,8 +26,9 @@ def _lineitem_view(spark, sf_dir) -> None:
 
 
 def _sess(spark: SparkSession) -> AdhesiveSession:
-    # AdhesiveSession is a thin stateless wrapper; the UDF registry lives
-    # in the SparkSession, so re-wrapping per query is free.
+    # A fresh wrapper per query: its factory registry starts empty, while
+    # the functions it registers live in the SparkSession's catalog, where
+    # each query's CREATE replaces its own; re-wrapping per query is free.
     return AdhesiveSession(spark)
 
 

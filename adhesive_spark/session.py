@@ -20,11 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from adhesive_spark.functions.ddl import (
-    is_create_function,
-    is_drop_function,
-    parse_drop_function,
-)
+from adhesive_spark.functions.ddl import drop_function_name, is_create_function
 from adhesive_spark.functions.factory import FunctionFactory
 
 #: Defaults chosen for the 100 TB design point, applied at build time.
@@ -94,15 +90,12 @@ class AdhesiveSession:
             self.factory.create_function(query)
             # DDL returns an empty OK relation, like DataFusion's DDL result.
             return self.spark.sql("SELECT 1 AS ok WHERE 1 = 0")
-        if is_drop_function(query):
-            name, if_exists = parse_drop_function(query)
-            if name in self.factory.registry:
-                self.factory.drop_function(name, if_exists=if_exists)
-                return self.spark.sql("SELECT 1 AS ok WHERE 1 = 0")
-            # not a factory function: pass through so catalog/temp
-            # functions created outside the factory keep Spark's native
-            # DROP semantics (pre-interceptor behavior)
-            return self.spark.sql(query, **kwargs)
+        name = drop_function_name(query)
+        if name in self.factory.registry:
+            self.factory.drop_function(name)
+            return self.spark.sql("SELECT 1 AS ok WHERE 1 = 0")
+        # anything else, including a DROP of a function created outside
+        # the factory (Spark's native DROP semantics, IF EXISTS included)
         return self.spark.sql(query, **kwargs)
 
     # Convenience passthroughs so the wrapper is a drop-in for common use.

@@ -87,30 +87,19 @@ def _corpus_ckpt_level():
     return StorageLevel.MEMORY_AND_DISK
 
 
-#: Storage level for CORPUS-SCALED localCheckpoints (see
-#: :func:`checkpoint_corpus`): PySpark's MEMORY_AND_DISK maps to the
-#: JVM's SERIALIZED memory+disk level — bounded bytes, disk-spillable.
+#: Storage level for localCheckpoints of CORPUS-SCALED grains (rows
+#: proportional to input docs / events / edges / tokens). The default
+#: local-checkpoint level stores DESERIALIZED JVM objects, and Spark's
+#: disk-block read path re-inflates evicted blocks as values
+#: (``maybeCacheDiskValuesInMemory``) — at the 10 000× stress rung that
+#: working set OOMed a 48 g heap on link_prediction. PySpark's
+#: MEMORY_AND_DISK maps to the JVM's SERIALIZED memory+disk level: blocks
+#: are ~an order of magnitude smaller, overflow to disk, and re-cache as
+#: bounded BYTES. Contractually tiny tables (rung spines, K×K matrices,
+#: centroid sets, per-source rollups) keep the plain default —
+#: deserialized reads are cheaper and their bytes are bounded by the
+#: schema, not the corpus.
 CORPUS_CKPT_LEVEL = _corpus_ckpt_level()
-
-
-def checkpoint_corpus(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` pinned to SERIALIZED, disk-spillable storage
-    for CORPUS-SCALED grains (rows proportional to input docs / events /
-    edges / tokens).
-
-    The default local-checkpoint level stores DESERIALIZED JVM objects
-    and Spark's disk-block read path re-inflates evicted blocks as
-    values (`maybeCacheDiskValuesInMemory`) — at the 10 000× stress rung
-    that working set OOMed a 48 g heap on link_prediction before the
-    r12 fix pinned serialized storage there (eval_queries).  This
-    helper applies the same discipline everywhere a checkpointed grain
-    scales with the corpus: PySpark's ``MEMORY_AND_DISK`` maps to the
-    JVM's serialized level, blocks are ~an order of magnitude smaller,
-    overflow to disk, and re-cache as bounded BYTES.  Contractually
-    tiny tables (rung spines, K×K matrices, centroid sets, per-source
-    rollups) keep the plain default — deserialized reads are cheaper
-    and the bytes are bounded by the schema, not the corpus."""
-    return df.localCheckpoint(eager=eager, storageLevel=CORPUS_CKPT_LEVEL)
 
 
 def register_tables(

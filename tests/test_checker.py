@@ -15,6 +15,7 @@ import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
@@ -83,16 +84,27 @@ def test_oracle_and_query_registries_align():
         f"queries without oracle: {sorted(q - o)}; "
         f"oracles without query: {sorted(o - q)}"
     )
-    # symmetric-loss guard: a query module failing at import drops its
-    # entries from BOTH registries (matching except-ImportError blocks
-    # in __spark_entry__), so q == o alone would still pass — anchor
-    # the count against the static plan-audit list
+    # symmetric-loss guard: a query module that registers nothing loses
+    # its entries from BOTH registries, so q == o alone would still pass —
+    # anchor the count against the static plan-audit list
     from tools.plan_report import AUDITED
 
     assert len(q) >= len(AUDITED), (
         f"registry lost entries: {len(q)} < {len(AUDITED)} audited — "
         "a query module probably failed to import"
     )
+
+
+def test_query_module_import_failure_is_loud(monkeypatch):
+    """A query module that fails to import fails queries() and
+    oracle_sql() instead of silently dropping its entries."""
+    import __spark_entry__ as entry_mod
+
+    monkeypatch.setitem(sys.modules, "adhesive_spark.queries.estimator_queries", None)
+    with pytest.raises(ImportError):
+        entry_mod.queries()
+    with pytest.raises(ImportError):
+        entry_mod.oracle_sql()
 
 
 def test_complex_typed_cells_hard_fail_both_sides():
