@@ -7,16 +7,15 @@
   presentation step.
 - :func:`kmeans` — spherical k-means (cosine), deterministic seeding
   (the k lowest-id vectors), fixed iteration count. Each iteration is
-  the IVF assignment step (broadcast centroids, rank-1 window) plus the
-  centroid recomputation above — i.e. the operator composes from the
-  same primitives the similarity/IVF stack uses. Determinism contract:
+  a map-only nearest-centroid assignment (the step the IVF index also
+  uses) plus the centroid recomputation above. Determinism contract:
   similarities are rounded to 6 decimals before argmin ranking and
   centroid coordinates to 9 decimals between iterations, so the
   trajectory is bit-reproducible across engines (raw float ordering is
   not) — this is what makes an ITERATIVE algorithm oracle-checkable.
 
 The reference has no iterative or ML operators; north-star surface
-(BASELINE.json), built on Catalyst-only primitives.
+(BASELINE.json).
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from adhesive_spark.operators.similarity import cosine
 from adhesive_spark.operators.text import fround
 from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
@@ -47,74 +45,45 @@ def label_centroids(
     )
 
 
-def _assign(
-    vectors: DataFrame, centroids: DataFrame, engine: str = "vectorized"
-) -> DataFrame:
+def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment. Ties resolve to the lowest cid,
     same contract as ORDER BY sim DESC, cid. vectors: (vec_id, v);
     centroids: (cid, cv) → (vec_id, v, cid).
 
-    ``engine="vectorized"`` (default since round 10): the k centroids
-    (tiny by contract — they were broadcast before) are materialized
-    into an Arrow kernel that computes the RAW cosine of each vector
-    against all of them in one trip, replaying the HOF fold's
-    per-dimension IEEE order; rounding to 6 dp and the argmax stay
-    SPARK-side (``round``'s HALF_UP must come from one engine, or the
-    DuckDB-oracle trajectory contract breaks), via an in-row zip_with +
-    array_max over k elements.  Assignment is thereby MAP-ONLY — the
-    crossJoin×k expansion and the vec_id re-aggregation shuffle are
-    gone.  ``engine="hof"``: the original broadcast crossJoin + HOF
-    cosine + max(struct(sim, -cid)) aggregate (map-side combined),
-    kept as the reference twin; bit-equality machine-checked
-    (test_scale_ops::test_kmeans_assign_vectorized_matches_hof).
+    The k centroids (tiny by contract) are materialized into an Arrow
+    kernel that computes the RAW cosine of each vector against all of
+    them in one trip, replaying ``similarity.cosine``'s per-dimension
+    IEEE order; rounding to 6 dp and the argmax stay SPARK-side (``round``'s
+    HALF_UP must come from one engine, or the DuckDB-oracle trajectory
+    contract breaks), via an in-row zip_with + array_max over k
+    elements.  Assignment is thereby MAP-ONLY: no crossJoin×k expansion
+    and no vec_id re-aggregation shuffle. The labeling is bit-equal to
+    a broadcast crossJoin + ``max(struct(sim, -cid))`` aggregate, kept
+    as the test reference (tests/test_scale_ops.py).
 
-    NOTE: the vectorized engine EAGERLY collects the centroid block at
-    plan-construction time (a Spark job runs inside this call) — the
-    returned plan snapshots the centroids rather than recomputing them
-    per execution, the same bytes a broadcast would pin."""
-    if engine == "vectorized":
-        crows = (
-            centroids.select(
-                "cid", F.col("cv").cast("array<double>").alias("cv")
-            )
-            .orderBy("cid")
-            .collect()
+    Corner inputs: null or ragged vectors and zero-norm pairs emit null
+    sims (what ``cosine``'s try_divide/null fold yields) instead of
+    crashing np.stack or leaking NaN; the homogeneous no-null batch
+    takes the fast path. Scoring is float64 regardless of the stored
+    element width. Zero centroids return the empty result without
+    touching the vectors.
+
+    NOTE: the centroid block is collected EAGERLY at plan-construction
+    time (a Spark job runs inside this call) — the returned plan
+    snapshots the centroids rather than recomputing them per execution,
+    the same bytes a broadcast would pin."""
+    crows = (
+        centroids.select("cid", F.col("cv").cast("array<double>").alias("cv"))
+        .orderBy("cid")
+        .collect()
+    )
+    if not crows:
+        return vectors.limit(0).select(
+            "vec_id",
+            "v",
+            F.lit(None).cast(centroids.schema["cid"].dataType).alias("cid"),
         )
-        if crows:
-            return _assign_vectorized(vectors, crows)
-    scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "v",
-        F.struct(
-            F.round(
-                cosine(
-                    F.col("v").cast("array<double>"),
-                    F.col("cv").cast("array<double>"),
-                ),
-                6,
-            ).alias("sim"),
-            (-F.col("cid")).alias("neg_cid"),
-        ).alias("__cand"),
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.first("v").alias("v"), F.max("__cand").alias("__best"))
-        .select("vec_id", "v", (-F.col("__best.neg_cid")).alias("cid"))
-    )
-
-
-def _assign_vectorized(vectors: DataFrame, crows) -> DataFrame:
-    """Map-only assignment core: kernel emits raw sims (bit-exact with
-    the HOF fold), Spark rounds and argmaxes in-row over k elements.
-
-    Corner inputs mirror the HOF twin (r10 ADVICE): null or ragged
-    vectors and zero-norm pairs emit null sims (the crossJoin twin's
-    try_divide/null-fold results) instead of crashing np.stack or
-    leaking NaN; the homogeneous no-null batch — every committed
-    caller — takes the original byte-identical fast path. Both engines
-    compute in float64 regardless of stored element width."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
 
@@ -122,7 +91,7 @@ def _assign_vectorized(vectors: DataFrame, crows) -> DataFrame:
     C = np.array([list(r["cv"]) for r in crows], dtype=np.float64)
     kn = len(cids)
     dim = C.shape[1] if C.ndim == 2 else 0
-    c_norm_sq = (C * C).sum(axis=1) if kn else np.zeros(0)
+    c_norm_sq = (C * C).sum(axis=1)
 
     def _score_block(A: "np.ndarray") -> "np.ndarray":
         n, d = A.shape
@@ -161,7 +130,7 @@ def _assign_vectorized(vectors: DataFrame, crows) -> DataFrame:
             sims = _score_block(A)
             # per-PAIR zero-norm mask (a single zero-norm centroid must
             # not null out the other centroids' sims); NaN from NaN
-            # elements stays a value, matching the HOF fold
+            # elements stays a value, matching cosine()'s fold
             zero_pair = ((A * A).sum(axis=1)[:, None] == 0.0) | (
                 c_norm_sq[None, :] == 0.0
             )
@@ -219,8 +188,9 @@ def kmeans(
     """Run ``n_iter`` spherical k-means iterations; returns the final
     centroids long-form: (cid, pos, val) with val rounded to 6.
 
-    Per-iteration plan cost is two shuffles (top-1 window by vec;
-    centroid groupBy); the centroid relation is tiny and broadcast.
+    Per iteration, the assignment is map-only against the tiny collected
+    centroid block; the centroid recomputation's two aggregates are the
+    only shuffles.
     Lineage is cut per iteration — mandatory for any iterative
     DataFrame algorithm (plan growth is exponential otherwise).
     """

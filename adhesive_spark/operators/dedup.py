@@ -7,7 +7,8 @@ Five strategies, all shuffle-conscious:
 - :func:`minhash_lsh_pairs` / :func:`dedup_minhash` — shingle → minhash
   signature → banded LSH → bucket self-join → exact-Jaccard verify.
   Candidate generation touches only same-band buckets (no O(n²) pair
-  space); all signature math is built-in expressions (JVM-side).
+  space); shingle hashing is JVM-side, the permutation minimums are one
+  Arrow-batched numpy kernel.
 - :func:`simhash_signatures` / :func:`simhash_pairs` — 64-bit SimHash
   with chunk-banding for candidate generation and ``bit_count`` Hamming
   verify. Token hashing JVM-side; bit-vote aggregation via a vectorized
@@ -161,53 +162,22 @@ def portable_hash63(s):
     return hi * F.lit(4294967296) + lo
 
 
-def _coeff_array(num_perm: int, seed: int = 42):
-    """The permutation coefficients as ONE literal array<struct<a,b>>
-    column, so the whole signature is a single nested higher-order
-    expression — NOT num_perm copies of the transform. 64 unrolled
-    copies were observed to produce a codegen unit whose first-run
-    Janino+JIT compile cost tens of seconds; the HOF form is a loop in
-    one tiny compiled class with identical per-row work."""
-    return F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _perm_coeffs(num_perm, seed)
-        ]
-    )
-
-
-def minhash_signature_from_base(base_col, num_perm: int = 64, seed: int = 42):
-    """Array<long> MinHash signature over an already-materialized column
-    of base hashes (array<long>).
-
-    ``base_col`` MUST be a plain column reference (cached/projected), not
-    a subtree: it is referenced inside the per-coefficient lambda, so an
-    inline expression would be re-evaluated num_perm times.
-    """
-    return F.transform(
-        _coeff_array(num_perm, seed),
-        lambda c: F.array_min(
-            F.transform(
-                base_col, lambda h: (h * c["a"] + c["b"]) % _MERSENNE
-            )
-        ),
-    )
-
-
 def minhash_signature_kernel(num_perm: int = 64, seed: int = 42):
-    """Arrow-batched twin of :func:`minhash_signature_from_base`: the
-    same affine-permutation minimum over the SAME materialized base
-    hashes, computed as one int64 numpy matrix op per document instead
-    of num_perm interpreted HOF scans.
+    """MinHash signature over a materialized column of base hashes
+    (array<long>): for each affine permutation (a·h+b) mod M₃₁ the
+    minimum over the document's base hashes, computed as one int64
+    numpy matrix op per document over an Arrow batch.
 
     Exactness is structural, not approximate: base hashes are < 2³¹ and
     coefficients a < 2³⁰, so h·a+b < 2⁶² fits int64 with no overflow,
     `%` on non-negatives equals pmod, and min over ints is order-free —
-    the signature longs are IDENTICAL to the HOF twin's (machine-checked
-    bit-equal, tests/test_operators.py). Null/empty shingle sets yield
-    the HOF plan's [null]×num_perm. Measured 1.9× on the full 1.5 M-doc
-    signature stage (61.1 s → 32.8 s — the shared md5 shingle-hash
-    checkpoint is included in both; STRESS.md round 10)."""
+    the signature longs are IDENTICAL to the pure-Catalyst
+    higher-order-function formulation kept as the test reference
+    (machine-checked bit-equal, tests/test_operators.py). Null/empty
+    shingle sets yield [null]×num_perm. Measured 1.9× faster than that
+    reference on the full 1.5 M-doc signature stage (61.1 s → 32.8 s —
+    the shared md5 shingle-hash checkpoint is included in both;
+    STRESS.md)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType
@@ -231,32 +201,6 @@ def minhash_signature_kernel(num_perm: int = 64, seed: int = 42):
     return _sig
 
 
-def minhash_signature(
-    col,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-):
-    """Array<long> MinHash signature, entirely in built-in expressions.
-
-    The shingle set is hashed ONCE (portable md5-prefix hash) into a
-    named lambda variable (so it is NOT recomputed per permutation);
-    each permutation is an affine transform (a*h+b) mod M₃₁ over the
-    base hashes."""
-    shingles = word_shingles(col, shingle_n)
-    base = F.transform(shingles, lambda s: F.pmod(portable_hash32(s), F.lit(_MERSENNE)))
-    # Bind base once via a single-element transform scope: the outer
-    # lambda variable `bs` is evaluated once per row, then reused by all
-    # num_perm inner scans.
-    return F.element_at(
-        F.transform(
-            F.array(base),
-            lambda bs: minhash_signature_from_base(bs, num_perm, seed),
-        ),
-        1,
-    )
-
-
 def minhash_base_and_bands(
     df: DataFrame,
     text_col: str = "text",
@@ -266,7 +210,6 @@ def minhash_base_and_bands(
     bands: int = 16,
     shingle_n: int = 3,
     seed: int = 42,
-    engine: str = "vectorized",
 ) -> tuple[DataFrame, DataFrame]:
     """Shared signature stage of the LSH pipeline: returns
     ``(base, band_rows)`` where base = (id, shingles, sig) and
@@ -274,13 +217,10 @@ def minhash_base_and_bands(
     :func:`minhash_lsh_pairs` and by the persisted-index pair
     (:func:`persist_minhash_index` / :func:`probe_minhash_index`).
 
-    ``engine="vectorized"`` (default since round 10) computes the
-    permutation minimums with :func:`minhash_signature_kernel` —
-    identical longs, 1.9× on the signature pass (61.1 s→32.8 s at the
-    1.5 M-doc rung — the one measured number, see
-    :func:`minhash_signature_kernel`); ``engine="hof"``
-    keeps the pure-Catalyst HOF twin.  The md5 shingle hashing stays
-    JVM-side in both (it is what keeps the pipeline oracle-portable)."""
+    The permutation minimums come from :func:`minhash_signature_kernel`
+    (1.9× faster than the higher-order-function formulation on the
+    signature pass, identical longs). The md5 shingle hashing stays
+    JVM-side: it is what keeps the pipeline oracle-portable."""
     rows_per_band = num_perm // bands
     assert rows_per_band * bands == num_perm, "bands must divide num_perm"
 
@@ -305,19 +245,16 @@ def minhash_base_and_bands(
         ),
     ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
 
-    if engine == "vectorized":
-        sig = minhash_signature_kernel(num_perm, seed)(F.col("base"))
-    else:
-        sig = minhash_signature_from_base(F.col("base"), num_perm, seed)
+    sig = minhash_signature_kernel(num_perm, seed)(F.col("base"))
     base = hashed.select("id", "shingles", sig.alias("sig"))
 
     # Second boundary ABOVE the signature kernel: an id-keyed exchange
     # (unique key — unskewable) that every consumer of band_rows reads
     # back as one reused shuffle stage, so the kernel — the pipeline's
     # most expensive stage — evaluates ONCE even under the pairs
-    # self-join (r11 dupPy audit: it ran once per join side). The band
-    # re-derivation per side is cheap JVM md5. Two deliberate choices,
-    # both 1000×-ladder-measured (r11):
+    # self-join (without it the kernel ran once per join side). The
+    # band re-derivation per side is cheap JVM md5. Two deliberate
+    # choices, both measured on the 1000× ladder:
     # - NOT a band-key repartition: user REPARTITION_BY_COL is excluded
     #   from AQE's skew-join splitting, and without that splitting the
     #   hot-bucket pair join heap-OOMs;
@@ -397,7 +334,7 @@ def minhash_lsh_pairs(
     # ENSURE-origin shuffles are the ones AQE's skew-join rule can
     # split when an N-copy cluster floods one band bucket. (A band-key
     # repartition here would reuse one exchange but is excluded from
-    # skew splitting — it heap-OOMed the 1000× ladder, r11.)
+    # skew splitting — it heap-OOMed the 1000× ladder.)
     l = band_rows.alias("l")
     r = band_rows.alias("r")
     candidates = (
@@ -415,7 +352,7 @@ def minhash_lsh_pairs(
     # |A∪B| = |A|+|B|-|A∩B| exactly: word_shingles emits array_distinct
     # grams, so computing the union SIZE arithmetically skips
     # materializing the union array per pair (~10% off the verify
-    # stage at the sf1 rung, r13) — same integer operands, same double
+    # stage at the sf1 rung) — same integer operands, same double
     # division, same round.
     verified = (
         candidates.join(sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), "id_a")
@@ -1112,7 +1049,7 @@ def probe_minhash_index(
     Scale shape: probe-side cost is proportional to the BATCH, not the
     corpus; the index side ships only the colliding bands/shingles.
 
-    Every join here is pinned to sort-merge (r12, measured): AQE's
+    Every join here is pinned to sort-merge (measured): AQE's
     broadcast conversion sizes a side by its COMPRESSED shuffle bytes,
     and a duplicate-heavy batch — exactly this operator's workload —
     under-reports by the duplication factor. At the 10 000× stress rung

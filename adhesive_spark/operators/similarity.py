@@ -60,101 +60,64 @@ def knn_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    engine: str = "vectorized",
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    ``queries``: (query_id, embedding) — the SMALL broadcast side of
-    the contract (the corpus is the scale side).  Ranking window
-    partitioned by query id; ties broken by corpus id for determinism.
+    ``queries``: (query_id, embedding) — the SMALL side of the contract
+    (the corpus is the scale side).  Ranking window partitioned by
+    query id; ties broken by corpus id for determinism.
 
-    ``engine="vectorized"`` (default since round 10): the query block
-    is materialized into the kernel's closure (the same driver-side
-    footprint the broadcast already implies) and each corpus vector is
-    shipped over Arrow ONCE, scored against every query inside a numpy
-    kernel whose per-dimension loop replays the HOF fold's IEEE
-    operation order exactly — bit-equality with the ``engine="hof"``
-    twin is machine-checked (test_scale_ops) and measured 4× faster at
-    the 1000× ladder rung (2 M × 25 pairs: 32.8 s HOF → 8.1 s).
-    NOTE: the vectorized engine EAGERLY collects the query block at
-    plan-construction time (a Spark job runs inside this call), so
-    upstream errors surface here and later changes to the ``queries``
-    DataFrame's inputs are NOT picked up by re-executing the returned
-    plan — snapshot semantics, matching what broadcasting a collected
-    block implies.
-    ``engine="hof"``: the original pure-Catalyst crossJoin + HOF-fold
-    cosine, kept as the reference twin (also the lazy path for zero
-    queries).
+    The query block is materialized into an Arrow kernel's closure (the
+    driver-side footprint a broadcast would imply) and each corpus
+    vector is shipped over Arrow ONCE, scored against every query in
+    one trip; query positions map back to ids via a literal array.
+    Measured 4× faster than a crossJoin + higher-order-function cosine
+    at the 1000× ladder rung (2 M × 25 pairs: 32.8 s → 8.1 s).
+    NOTE: the query block is collected EAGERLY at plan-construction
+    time (a Spark job runs inside this call), so upstream errors
+    surface here and later changes to the ``queries`` DataFrame's
+    inputs are NOT picked up by re-executing the returned plan —
+    snapshot semantics, matching what broadcasting a collected block
+    implies. Zero queries return the empty result without touching the
+    corpus.
 
-    Corner-input semantics (both engines agree; see
-    test_scale_ops::test_knn_corner_inputs): null or ragged vectors —
-    on either side — and zero-norm pairs score ``sim = null`` (ranked
-    last under the DESC ordering); the one documented delta is a null
-    ELEMENT inside an otherwise non-null corpus vector, which Arrow
-    hands the kernel as NaN (sim NaN, ranked first like any NaN) while
-    the HOF fold yields null. Both engines compute in float64
-    regardless of the stored element width, so array<float> callers
-    get identical sims from either engine.
-    """
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).cast("array<double>").alias("__qvec"),
-    )
-    if engine == "vectorized":
-        qrows = q.collect()
-        if qrows:
-            return _knn_bruteforce_vectorized(
-                corpus, qrows, k=k, id_col=id_col, vec_col=vec_col,
-                query_id_col=query_id_col,
-            )
-        # zero queries: fall through to the HOF plan (empty result,
-        # correct schema)
-    scored = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cvec")
-    ).crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
-        F.round(cosine(F.col("__cvec"), F.col("__qvec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
-
-
-def _knn_bruteforce_vectorized(
-    corpus, qrows, *, k, id_col, vec_col, query_id_col
-):
-    """Batched scorer behind knn_bruteforce(engine="vectorized"):
-    one Arrow trip per CORPUS vector (not per pair), all queries scored
-    in-kernel, positions mapped back to query ids via a literal array.
-
-    Bit-exactness with the HOF twin: the kernel accumulates dot and
+    Bit-exactness with :func:`cosine`: the kernel accumulates dot and
     both norms dimension-by-dimension in the same order as the left
     fold (``acc += A[:, j] * B[:, j]`` for j ascending), so every
     float64 add/mul happens in the identical IEEE sequence and the
-    rounded sims are byte-identical.
+    rounded sims are byte-identical to the crossJoin formulation kept as
+    the test reference (tests/test_scale_ops.py).
 
-    Corner inputs mirror the HOF twin (r10 ADVICE): null queries, null
-    or ragged corpus rows, and zero-norm pairs all emit ``null`` sims
-    instead of crashing ``np.stack``/``list(...)`` or leaking kernel
-    NaNs where the fold yields null. Rows are grouped by length and
-    each group scored against the same-length query block with the
-    identical fold, so the homogeneous fast path (every committed
-    caller) is byte-for-byte the original kernel."""
+    Corner inputs: null or ragged vectors — on either side — and
+    zero-norm pairs score ``sim = null`` (ranked last under the DESC
+    ordering), never a crash in ``np.stack`` or a kernel NaN. Rows are
+    grouped by length and each group scored against the same-length
+    query block with the identical fold, so the homogeneous batch takes
+    the fast path. The one delta from :func:`cosine` is a null ELEMENT
+    inside an otherwise non-null corpus vector, which Arrow hands the
+    kernel as NaN (sim NaN, ranked first like any NaN) where the fold
+    yields null. Scoring is float64 regardless of the stored element
+    width, so array<float> and array<double> inputs rank identically.
+    """
+    qrows = queries.select(
+        F.col(query_id_col),
+        F.col(vec_col).cast("array<double>").alias("__qvec"),
+    ).collect()
+    if not qrows:
+        return queries.limit(0).select(
+            F.col(query_id_col),
+            F.lit(None).cast(corpus.schema[id_col].dataType).alias(id_col),
+            F.lit(None).cast("double").alias("sim"),
+            F.lit(1).alias("rank"),
+        )
     import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
 
     qids = [r[0] for r in qrows]
     qn = len(qids)
     # queries grouped by vector length; a null query joins no group and
-    # therefore scores null against every corpus row (the HOF result)
+    # therefore scores null against every corpus row, as cosine() does
     qgroups: dict[int, list[int]] = {}
     for idx, r in enumerate(qrows):
         if r[1] is not None:
@@ -168,7 +131,8 @@ def _knn_bruteforce_vectorized(
     }
 
     def _score_block(A: "np.ndarray", Q: "np.ndarray") -> "np.ndarray":
-        # the HOF fold replay: j-ascending, identical IEEE sequence
+        # cosine()'s left fold replayed: j-ascending, identical IEEE
+        # sequence
         n, d = A.shape
         bn = Q.shape[0]
         acc = np.zeros((n, bn))
@@ -215,7 +179,7 @@ def _knn_bruteforce_vectorized(
                 ):
                     return pd.Series(list(_score_block(A, Q)))
         # SLOW PATH (corner inputs only): per-length groups, null sims
-        # for null/ragged/zero-norm pairs — the HOF twin's semantics.
+        # for null/ragged/zero-norm pairs — cosine()'s semantics.
         out = np.full((n, qn), np.nan)
         valid = np.zeros((n, qn), dtype=bool)
         for L in np.unique(lens):
@@ -251,7 +215,7 @@ def _knn_bruteforce_vectorized(
     # by_size: AQE sizes the kernel stage's fanout from the measured
     # shuffle bytes — a ~1 MB corpus scores in ONE task (32 fixed-width
     # tasks cost ~0.4 s of per-task Python overhead to score 2k rows,
-    # the r10 bench finding) while the 2 M-row ladder, whose split
+    # measured on the bench) while the 2 M-row ladder, whose split
     # count lies about its size, still fans out to ~bytes/64 MB tasks.
     scored = (
         ensure_parallelism(corpus, id_col, by_size=True)
@@ -265,7 +229,7 @@ def _knn_bruteforce_vectorized(
             # Catalyst infer `size(__sims)>0 AND isnotnull(__sims)` and
             # push it below the exchange, which re-evaluates the Arrow
             # kernel over the ENTIRE corpus a second time just to
-            # decide the filter (r11 plan read: two ArrowEvalPython
+            # decide the filter (the plan showed two ArrowEvalPython
             # nodes). The kernel always returns a length-qn array, so
             # outer emits exactly the same rows — with ONE evaluation.
             F.posexplode_outer(F.col("__sims")).alias("__qpos", "__sim"),
@@ -630,7 +594,8 @@ def quantize_embeddings(
     s_expr = F.array_max(F.transform(v, lambda x: F.abs(x)))
 
     # Bind scale (and then the code array) ONCE per row via the
-    # single-element-transform scope (the minhash_signature pattern):
+    # single-element-transform scope (as dedup.word_shingles binds its
+    # token array):
     # a projected column would be re-inlined into the lambdas by
     # CollapseProject and the array_max scan would run per element —
     # O(d²) per row (verified in the optimized plan).

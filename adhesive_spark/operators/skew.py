@@ -38,8 +38,8 @@ def salted_join(
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
     keys = [on] if isinstance(on, str) else list(on)
 
-    # DETERMINISTIC salt (r13): the previous rand(seed)-derived salt is
-    # the SPARK-38388 hazard class — a fetch failure re-runs map tasks,
+    # DETERMINISTIC salt: a rand(seed)-derived salt is the
+    # SPARK-38388 hazard class — a fetch failure re-runs map tasks,
     # re-run tasks can see rows in a different order, and rand() then
     # assigns DIFFERENT salts, silently duplicating or dropping join
     # rows.  Hashing the whole row is retry-stable (same row ⇒ same
@@ -187,11 +187,11 @@ def salted_sweep(
     and the pinned-width repartition on (key, salt) spreads them —
     pass 1 then sorts ~rows/width per task, below the external-sort
     cliff (~6.7 M rows/partition). The width is pinned, not AQE-sized,
-    per the r11 minhash lesson (an AQE-sized user exchange coalesces
-    below the width the downstream stage needs); the window reuses the
-    exchange (same clustering), so pass 1 still costs ONE shuffle of
-    the input. Pass 2 shuffles only the partials (≤ islands, typically
-    ≪ rows). Default ``width`` = n_salts × shuffle.partitions.
+    as in dedup.minhash_base_and_bands (an AQE-sized user exchange
+    coalesces below the width the downstream stage needs); the window
+    reuses the exchange (same clustering), so pass 1 still costs ONE
+    shuffle of the input. Pass 2 shuffles only the partials (≤ islands,
+    typically ≪ rows). Default ``width`` = n_salts × shuffle.partitions.
     """
     if n_salts < 2:
         raise ValueError(f"n_salts must be >= 2, got {n_salts}")

@@ -6,11 +6,11 @@ here fast — without needing the DuckDB side."""
 import hashlib
 
 from pyspark.sql import functions as F
+from twins import minhash_signature
 
 from adhesive_spark.operators.dedup import (
     _MERSENNE,
     _perm_coeffs,
-    minhash_signature,
     portable_hash32,
     portable_hash63,
 )

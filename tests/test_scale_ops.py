@@ -497,12 +497,13 @@ def test_salted_sweep_rejects_degenerate_salts(spark):
 
 
 def test_knn_vectorized_matches_hof_twin(spark, sf_dir):
-    """knn_bruteforce's default batched-kernel engine (round 10) must be
-    BYTE-equal to the pure-Catalyst HOF twin — same (query, id, sim,
-    rank) rows including the 6-dp rounded sims, on the real embedding
-    table.  The kernel replays the HOF fold's per-dimension IEEE
-    operation order, so this is exact equality, not approximate."""
+    """knn_bruteforce's batched kernel must be BYTE-equal to the
+    pure-Catalyst HOF twin — same (query, id, sim, rank) rows including
+    the 6-dp rounded sims, on the real embedding table.  The kernel
+    replays the HOF fold's per-dimension IEEE operation order, so this
+    is exact equality, not approximate."""
     from pyspark.sql import functions as F
+    from twins import knn_bruteforce_hof
 
     from adhesive_spark.operators.similarity import knn_bruteforce
     from adhesive_spark.sources.registry import load_table
@@ -515,24 +516,23 @@ def test_knn_vectorized_matches_hof_twin(spark, sf_dir):
     )
     vec = {
         (r.query_id, r.rank): (r.vec_id, r.sim)
-        for r in knn_bruteforce(
-            emb, queries, k=5, engine="vectorized"
-        ).collect()
+        for r in knn_bruteforce(emb, queries, k=5).collect()
     }
     hof = {
         (r.query_id, r.rank): (r.vec_id, r.sim)
-        for r in knn_bruteforce(emb, queries, k=5, engine="hof").collect()
+        for r in knn_bruteforce_hof(emb, queries, k=5).collect()
     }
     assert vec == hof and len(vec) == 35
 
 
 def test_kmeans_assign_vectorized_matches_hof(spark, sf_dir):
-    """The map-only kernel assignment (round 10 default) must produce
-    the IDENTICAL (vec_id -> cid) labeling as the crossJoin+HOF twin —
-    rounding and argmax semantics live Spark-side in both engines, and
-    the kernel's raw sims replay the fold's IEEE order, so this is
-    exact equality on the full embedding table."""
+    """The map-only kernel assignment must produce the IDENTICAL
+    (vec_id -> cid) labeling as the crossJoin+HOF twin — rounding and
+    argmax semantics live Spark-side in both engines, and the kernel's
+    raw sims replay the fold's IEEE order, so this is exact equality on
+    the full embedding table."""
     from pyspark.sql import functions as F
+    from twins import assign_hof
 
     from adhesive_spark.operators.clustering import _assign
     from adhesive_spark.sources.registry import load_table
@@ -546,22 +546,17 @@ def test_kmeans_assign_vectorized_matches_hof(spark, sf_dir):
         .limit(6)
         .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
     )
-    vec = {
-        r.vec_id: r.cid
-        for r in _assign(vectors, cents, engine="vectorized").collect()
-    }
-    hof = {
-        r.vec_id: r.cid
-        for r in _assign(vectors, cents, engine="hof").collect()
-    }
+    vec = {r.vec_id: r.cid for r in _assign(vectors, cents).collect()}
+    hof = {r.vec_id: r.cid for r in assign_hof(vectors, cents).collect()}
     assert vec == hof and len(vec) == vectors.count()
 
 
 def test_knn_corner_inputs_match_hof(spark):
-    """r10 ADVICE: null query vectors, null/ragged corpus rows, and
-    zero-norm pairs must not crash either engine and must produce the
-    SAME rows from both — null sims rank last, never kernel NaNs that
-    sort first. Exercises every corner the advice listed."""
+    """Null query vectors, null/ragged corpus rows, and zero-norm pairs
+    must not crash either engine and must produce the SAME rows from
+    both — null sims rank last, never kernel NaNs that sort first."""
+    from twins import knn_bruteforce_hof
+
     from adhesive_spark.operators.similarity import knn_bruteforce
 
     corpus = spark.createDataFrame(
@@ -580,15 +575,13 @@ def test_knn_corner_inputs_match_hof(spark):
         "query_id long, embedding array<double>",
     )
 
-    def rows(engine):
+    def rows(knn):
         return sorted(
             (r.query_id, r.rank, r.vec_id, r.sim)
-            for r in knn_bruteforce(
-                corpus, queries, k=6, engine=engine
-            ).collect()
+            for r in knn(corpus, queries, k=6).collect()
         )
 
-    vec, hof = rows("vectorized"), rows("hof")
+    vec, hof = rows(knn_bruteforce), rows(knn_bruteforce_hof)
     assert vec == hof
     # valid pairs score; null/ragged/zero-norm pairs are null sims
     byq = {}
@@ -601,10 +594,11 @@ def test_knn_corner_inputs_match_hof(spark):
 
 
 def test_knn_float32_width_independent(spark):
-    """r10 ADVICE: array<float> embeddings must produce IDENTICAL sims
-    from both engines (both promote to float64 before the fold), so the
-    default-engine choice can never silently change float32 results."""
+    """array<float> embeddings must produce IDENTICAL sims from the
+    kernel and the HOF twin (both promote to float64 before the fold),
+    so the kernel can never silently change float32 results."""
     from pyspark.sql import functions as F
+    from twins import knn_bruteforce_hof
 
     from adhesive_spark.operators.similarity import knn_bruteforce
 
@@ -618,13 +612,11 @@ def test_knn_float32_width_independent(spark):
     ).withColumn("embedding", F.col("embedding").cast("array<float>"))
     vec = sorted(
         (r.query_id, r.rank, r.vec_id, r.sim)
-        for r in knn_bruteforce(
-            corpus, queries, k=4, engine="vectorized"
-        ).collect()
+        for r in knn_bruteforce(corpus, queries, k=4).collect()
     )
     hof = sorted(
         (r.query_id, r.rank, r.vec_id, r.sim)
-        for r in knn_bruteforce(corpus, queries, k=4, engine="hof").collect()
+        for r in knn_bruteforce_hof(corpus, queries, k=4).collect()
     )
     assert vec == hof and len(vec) == 8
 
@@ -635,6 +627,7 @@ def test_kmeans_assign_corner_inputs_match_hof(spark):
     tie resolves to the lowest cid via the shared struct comparator);
     float32 input assigns identically too."""
     from pyspark.sql import functions as F
+    from twins import assign_hof
 
     from adhesive_spark.operators.clustering import _assign
 
@@ -651,8 +644,8 @@ def test_kmeans_assign_corner_inputs_match_hof(spark):
     cents = spark.createDataFrame(
         [(7, [1.0, 1.0]), (9, [0.0, 1.0])], "cid long, cv array<double>"
     )
-    vec = {r.vec_id: r.cid for r in _assign(vectors, cents, "vectorized").collect()}
-    hof = {r.vec_id: r.cid for r in _assign(vectors, cents, "hof").collect()}
+    vec = {r.vec_id: r.cid for r in _assign(vectors, cents).collect()}
+    hof = {r.vec_id: r.cid for r in assign_hof(vectors, cents).collect()}
     assert vec == hof and len(vec) == 5
     assert vec[2] == 7 and vec[3] == 7 and vec[4] == 7  # all-null -> min cid
     # float32 twin agreement
@@ -660,6 +653,52 @@ def test_kmeans_assign_corner_inputs_match_hof(spark):
         "v", F.col("v").cast("array<float>")
     )
     c32 = cents.withColumn("cv", F.col("cv").cast("array<float>"))
-    vec32 = {r.vec_id: r.cid for r in _assign(v32, c32, "vectorized").collect()}
-    hof32 = {r.vec_id: r.cid for r in _assign(v32, c32, "hof").collect()}
+    vec32 = {r.vec_id: r.cid for r in _assign(v32, c32).collect()}
+    hof32 = {r.vec_id: r.cid for r in assign_hof(v32, c32).collect()}
     assert vec32 == hof32 and len(vec32) == 3
+
+
+def test_knn_zero_queries_is_empty_with_schema(spark):
+    """An empty query block yields zero rows with the full
+    (query_id, vec_id, sim, rank) schema."""
+    from adhesive_spark.operators.similarity import knn_bruteforce
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame([], "query_id long, embedding array<double>")
+    out = knn_bruteforce(corpus, queries, k=3)
+    assert out.dtypes == [
+        ("query_id", "bigint"),
+        ("vec_id", "bigint"),
+        ("sim", "double"),
+        ("rank", "int"),
+    ]
+    assert out.count() == 0
+
+
+def test_kmeans_zero_centroids_is_empty_with_schema(spark):
+    """Assignment against an empty centroid set yields zero
+    (vec_id, v, cid) rows, and k-means with k=0 zero (cid, pos, val)
+    rows."""
+    from pyspark.sql import functions as F
+
+    from adhesive_spark.operators.clustering import _assign, kmeans
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    vectors = corpus.select("vec_id", F.col("embedding").alias("v"))
+    cents = spark.createDataFrame([], "cid long, cv array<double>")
+    assigned = _assign(vectors, cents)
+    assert assigned.dtypes == [
+        ("vec_id", "bigint"),
+        ("v", "array<double>"),
+        ("cid", "bigint"),
+    ]
+    assert assigned.count() == 0
+    km = kmeans(corpus, k=0)
+    assert km.dtypes == [("cid", "bigint"), ("pos", "int"), ("val", "double")]
+    assert km.count() == 0
