@@ -4,8 +4,9 @@ Grammar (superset of the reference's, src/fusion.rs:22-58)::
 
     CREATE [OR REPLACE] [AGGREGATE] FUNCTION <name> ( [<arg> [, <arg>]*] )
         RETURNS <type> | TABLE ( <col> <type> [, <col> <type>]* )
-        [DETERMINISTIC] [STRICT]        -- order-independent modifiers
+        [DETERMINISTIC] [STRICT]        -- order-independent modifiers,
         [LANGUAGE PYTHON | PANDAS | MODULE | CLASS | JAVA | SQL]
+        [DETERMINISTIC] [STRICT]        -- on either side of LANGUAGE
         AS '<body>' | $$<body>$$
 
     <arg> := <type> | <name> <type>
@@ -46,7 +47,8 @@ _HEAD_RE = re.compile(
         \((?P<args>.*?)\)\s*
         RETURNS\s+(?P<ret>.+?)\s*
         (?P<mods>(?:(?:DETERMINISTIC|STRICT)\s+)*)
-        (?:LANGUAGE\s+(?P<lang>[A-Za-z_]+)\s*)?
+        (?:LANGUAGE\s+(?P<lang>[A-Za-z_]+)\s*
+           (?P<mods_after>(?:(?:DETERMINISTIC|STRICT)\s+)*))?
         AS\s+(?P<body>.+)\s*$""",
     re.I | re.X | re.S,
 )
@@ -93,8 +95,9 @@ def _extract_body(text: str) -> str:
     t = text.strip()
     if t.startswith("$$"):
         end = t.rfind("$$")
-        if end <= 0:
+        if end < 2:
             raise DdlParseError("unterminated $$ body")
+        _reject_trailing(t[end + 2 :])
         return t[2:end]
     for quote in ("'", '"'):
         if t.startswith(quote):
@@ -108,9 +111,7 @@ def _extract_body(text: str) -> str:
                         out.append(quote)
                         i += 2
                         continue
-                    rest = t[i + 1 :].strip()
-                    if rest and rest != ";":
-                        raise DdlParseError(f"trailing content after body: {rest[:40]!r}")
+                    _reject_trailing(t[i + 1 :])
                     return "".join(out)
                 out.append(c)
                 i += 1
@@ -119,6 +120,12 @@ def _extract_body(text: str) -> str:
         "function body must be a quoted literal or $$…$$ block "
         "(reference: class name or class definition should be provided, src/fusion.rs:57)"
     )
+
+
+def _reject_trailing(rest: str) -> None:
+    rest = rest.strip()
+    if rest and rest != ";":
+        raise DdlParseError(f"trailing content after body: {rest[:40]!r}")
 
 
 def parse_create_function(sql: str) -> FunctionDefinition:
@@ -153,7 +160,7 @@ def parse_create_function(sql: str) -> FunctionDefinition:
     lang = (m.group("lang") or "PYTHON").upper()
     body = _extract_body(m.group("body"))
     # DETERMINISTIC and STRICT are order-independent modifiers.
-    mods = (m.group("mods") or "").upper().split()
+    mods = f"{m.group('mods')} {m.group('mods_after') or ''}".upper().split()
     return FunctionDefinition(
         name=name,
         arg_names=arg_names,

@@ -562,7 +562,7 @@ class FunctionFactory:
         src/fusion.rs:78).  The compiled body runs per input row and
         yields (or returns an iterable of) output-row tuples; it is
         wrapped in a generated UDTF class and registered for SQL
-        ``LATERAL`` use, completing the factory triad scalar (R1-R17) /
+        ``LATERAL`` use, completing the factory triad scalar /
         AGGREGATE (q144) / TABLE."""
         from pyspark.sql.functions import udtf
 

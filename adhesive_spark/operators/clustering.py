@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from adhesive_spark.operators.text import fround
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 
 def label_centroids(
@@ -194,9 +194,12 @@ def kmeans(
     Lineage is cut per iteration — mandatory for any iterative
     DataFrame algorithm (plan growth is exponential otherwise).
     """
-    vectors = df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    vectors = materialize(
+        df.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+        ),
+        "corpus",
+    )
     centroids = (
         vectors.orderBy("vec_id")
         .limit(k)
@@ -204,7 +207,7 @@ def kmeans(
     )
     for _ in range(n_iter):
         assigned = _assign(vectors, centroids)
-        centroids = _recompute(assigned).localCheckpoint(eager=True)
+        centroids = materialize(_recompute(assigned), "bounded")
     return centroids.select(
         "cid", F.posexplode("cv").alias("pos", "val")
     ).select("cid", "pos", fround(F.col("val"), 6).alias("val"))

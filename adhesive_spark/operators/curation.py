@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adhesive_spark.sources.registry import materialize
+
 #: PII patterns deliberately restricted to syntax shared verbatim by
 #: Java regex (Spark) and RE2 (DuckDB) so the redaction is
 #: engine-reproducible: no backrefs, no lookaround.
@@ -218,10 +220,13 @@ def contamination_pairs(
         )
     # the bench side is small by nature but consumed twice (sizes +
     # the shingle join) — materialize its explode once
-    b = bench.select(
-        F.col(id_col).alias("bench_id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-    ).localCheckpoint(eager=True)
+    b = materialize(
+        bench.select(
+            F.col(id_col).alias("bench_id"),
+            F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
+        ),
+        "bounded",
+    )
     bench_sizes = b.groupBy("bench_id").agg(F.count("*").alias("bench_n_sh"))
     overlap = (
         t.join(b, "shingle")

@@ -38,7 +38,7 @@ from pyspark.sql.types import LongType
 
 from adhesive_spark.operators.text import fingerprint, normalize_text
 from adhesive_spark.sources.registry import ensure_parallelism
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 # Mersenne prime 2^31-1: affine minhash permutations stay in 31-bit
 # space so a*h+b (< 2^61) never overflows ANSI-mode BIGINT arithmetic.
@@ -231,19 +231,19 @@ def minhash_base_and_bands(
     # Materialization boundary BEFORE the permutation pass: without it,
     # CollapseProject inlines the whole shingle+hash subtree into the
     # signature expression and the verify join recomputes shingling.
-    # localCheckpoint (eager) instead of cache(): same physical boundary,
-    # but the blocks are owned by the RDD and reclaimed by the
-    # ContextCleaner when this call's plan is dropped — repeated calls
-    # don't accumulate entries in the session cache manager.
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_n).alias("shingles"),
-    ).withColumn(
-        "base",
-        F.transform(
-            "shingles", lambda s: F.pmod(portable_hash32(s), F.lit(_MERSENNE))
+    hashed = materialize(
+        df.select(
+            F.col(id_col).alias("id"),
+            word_shingles(F.col(text_col), shingle_n).alias("shingles"),
+        ).withColumn(
+            "base",
+            F.transform(
+                "shingles",
+                lambda s: F.pmod(portable_hash32(s), F.lit(_MERSENNE)),
+            ),
         ),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        "corpus",
+    )
 
     sig = minhash_signature_kernel(num_perm, seed)(F.col("base"))
     base = hashed.select("id", "shingles", sig.alias("sig"))
@@ -444,7 +444,7 @@ def simhash_pairs(
     4 chunks guarantees a shared chunk only for ≤3 differing chunks —
     standard SimHash banding recall).
     """
-    sigs = simhash_signatures(df, text_col, id_col).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    sigs = materialize(simhash_signatures(df, text_col, id_col), "corpus")
     chunks = sigs.select(
         "id",
         "simhash",
@@ -526,13 +526,13 @@ def ngram_jaccard_pairs(
     # (shingle, id) and count(*) ≡ document frequency), replacing the
     # separate frequency aggregate + join-back. The eager checkpoint
     # stores the same bytes one shuffle of the stream would write.
-    occ = (
+    occ = materialize(
         sh.repartition("shingle")
         .withColumn(
             "__df",
             F.count("*").over(Window.partitionBy("shingle")),
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     sizes = occ.groupBy("id").agg(F.count("*").alias("n_sh"))
     joinable = occ
@@ -594,13 +594,13 @@ def containment_pairs(
     # inside it (rows unique per (shingle, id) by array_distinct),
     # eager checkpoint so the explode kernel runs once for all four
     # consumers instead of six times.
-    occ = (
+    occ = materialize(
         sh.repartition("shingle")
         .withColumn(
             "__df",
             F.count("*").over(Window.partitionBy("shingle")),
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     sizes = occ.groupBy("id").agg(F.count("*").alias("n_sh"))
     joinable = occ
@@ -758,12 +758,11 @@ def bloom_membership_dedup(
     property per row — can in production be restricted to candidates.
 
     Boundary tradeoff: the distinct index fingerprint set is
-    materialized once (localCheckpoint) so the bloom build and the
+    materialized once at corpus grain so the bloom build and the
     exact verify share ONE evaluation of the index subtree.  That pins
-    the distinct-fp working set to executor storage (serialized,
-    disk-spillable) and, like every localCheckpoint, truncates lineage
-    — an executor loss during the query fails the job instead of
-    recomputing.  Callers with an index too large to pin per-executor
+    the distinct-fp working set to executor storage and truncates its
+    lineage (see :func:`~adhesive_spark.sources.registry.materialize`).
+    Callers with an index too large to pin per-executor
     or needing lineage-based recovery should pre-materialize the
     ``doc_fp`` index to storage themselves and pass that table in; the
     operator then checkpoints only the (already narrow) distinct set.
@@ -776,7 +775,7 @@ def bloom_membership_dedup(
     # set is exactly what the exact verify joins against, so a single
     # eager materialization (the same bytes the verify's distinct
     # shuffle writes anyway) now feeds both consumers.
-    idx_fp = index.select("doc_fp").distinct().localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    idx_fp = materialize(index.select("doc_fp").distinct(), "corpus")
     words = bloom_build(idx_fp, n_words=n_words, k=k)
     n_bits = 32 * n_words
     b = batch.select(
@@ -866,7 +865,7 @@ def ppjoin_pairs(
         F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
     )
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    docs = (
+    docs = materialize(
         sh.join(freq, "shingle")
         .groupBy("id")
         .agg(
@@ -877,11 +876,11 @@ def ppjoin_pairs(
         .select(
             "id",
             F.transform("__s", lambda s: s["shingle"]).alias("sh_arr"),
-        )
+        ),
         # used three times (prefix generation + both verify sides):
         # materialize once or the scan→freq-join→collect subtree runs
         # 3× and triples the exchange count
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        "corpus",
     )
     prefix_len = (
         F.size("sh_arr")

@@ -11,7 +11,7 @@ graph. This is the classic iterative min-label propagation:
 - converges in O(component diameter) rounds — near-dup clusters are
   shallow (dup rings around a source doc), so 3-5 rounds in practice.
 
-Scale notes: lineage is cut with ``localCheckpoint`` every round —
+Scale notes: lineage is cut with ``materialize`` every round —
 without it the plan doubles per iteration and the driver dies planning
 round ~15 long before data size matters. For graphs with whale
 components (diameter ≫ 10) the two-phase large-star/small-star
@@ -28,7 +28,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 #: Edge-count gate below which the component closure finishes on the
 #: driver (union-find over the collected edge list) instead of running
@@ -170,7 +170,7 @@ def connected_components(
     sym = sym.union(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    sym = sym.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    sym = materialize(sym, "corpus")
     _, fits = _cc_gate(sym, 2 * local_threshold)
     if fits:
         # one canonical direction (plus self-loops) is enough for the
@@ -200,15 +200,15 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("nb_comp").alias("nb_min"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(nb.withColumnRenamed("a", "node"), "node", "left")
             .select(
                 "node",
                 F.least(
                     F.col("component"), F.coalesce("nb_min", "component")
                 ).alias("component"),
-            )
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            ),
+            "corpus",
         )
         changed = (
             new_labels.alias("n")
@@ -296,14 +296,14 @@ def pagerank_integer(
     cross-joined in (broadcast), not a driver collect.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    e = e.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    e = materialize(e, "corpus")
     deg = e.groupBy("s").agg(F.count("*").alias("deg"))
-    ed = e.join(deg, "s").localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
-    nodes = (
+    ed = materialize(e.join(deg, "s"), "corpus")
+    nodes = materialize(
         e.select(F.col("s").alias("node"))
         .union(e.select("d"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     n_rel = nodes.agg(F.count("*").alias("n"))
     # init: 1/N, scaled; teleport base: (1-d)/N, scaled
@@ -323,7 +323,7 @@ def pagerank_integer(
         sums = contribs.groupBy("node").agg(
             F.sum("contrib").alias("in_sum")
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(sums, "node", "left")
             .crossJoin(F.broadcast(n_rel))
             .select(
@@ -335,8 +335,8 @@ def pagerank_integer(
                         f"* {damping_pct}) DIV 100"
                     )
                 ).alias("rank_scaled"),
-            )
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            ),
+            "corpus",
         )
     return ranks
 
@@ -398,7 +398,7 @@ def triangle_count(
             F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
         )
     # the oriented edge list feeds three join sides — materialize once
-    e = e.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    e = materialize(e, "corpus")
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     return (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -460,12 +460,12 @@ def connected_components_star(
     # evaluated exactly once.  The previous shape checkpointed nodes
     # and e separately, which evaluated the upstream twice and paid two
     # distinct shuffles.
-    canon = (
+    canon = materialize(
         raw.select(
             F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     nodes = (
         canon.select(F.col("a").alias("node"))
@@ -507,7 +507,7 @@ def connected_components_star(
         sym2 = _sym(large)
         small_nbrs = sym2.where(F.col("b") < F.col("a"))
         smins = small_nbrs.groupBy("a").agg(F.min("b").alias("m"))
-        new_e = (
+        new_e = materialize(
             small_nbrs.join(smins, "a")
             .select(
                 F.col("b").alias("child"), F.col("m").alias("root"), F.col("a")
@@ -526,8 +526,8 @@ def connected_components_star(
             )
             .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .where(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .distinct(),
+            "corpus",
         )
         n_new, fits = _cc_gate(new_e, local_threshold)  # cached scan
         if fits:

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adhesive_spark.sources.registry import materialize
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -328,7 +330,7 @@ def exact_quantile_ladder(
     spine = spark.createDataFrame(
         list(quants), "quantile string, num long, den long"
     )
-    targets = (
+    targets = materialize(
         cum.join(totals, key_col)
         .crossJoin(F.broadcast(spine))
         .withColumn("__k", F.expr("(n_rows * num + den - 1) div den"))
@@ -342,7 +344,7 @@ def exact_quantile_ladder(
             "quantile",
             "n_rows",
             (F.col("__k") - F.col("__before")).alias("__off"),
-        )
+        ),
         # Materialize the (tiny: |keys|·|quants| rows) target list ONCE.
         # Without this the whole phase-1 subtree — a FULL histogram pass
         # over the input — is re-evaluated for each of its three
@@ -350,7 +352,7 @@ def exact_quantile_ladder(
         # plan held 10 FileScans of events. The list is the same
         # cardinality class the code already broadcasts (cand), so no
         # new scale assumption.
-        .localCheckpoint(eager=True)
+        "bounded",
     )
     # phase 2 ranks ONLY the candidate buckets: semi-join the raw rows
     # to the (tiny, broadcast) target-bucket list BEFORE the window, so

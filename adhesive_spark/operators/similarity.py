@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from adhesive_spark.sources.registry import ensure_parallelism
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 
 def dot(a, b):
@@ -337,18 +337,19 @@ def build_ivf_index(
     if refine_iters > 0:
         from adhesive_spark.operators.clustering import _assign, _recompute
 
-        vectors = corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-        ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        vectors = materialize(
+            corpus.select(
+                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+            ),
+            "corpus",
+        )
         cents = (
             vectors.orderBy("vec_id")
             .limit(n_lists)
             .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
         )
         for _ in range(refine_iters):
-            cents = _recompute(_assign(vectors, cents)).localCheckpoint(
-                eager=True
-            )
+            cents = materialize(_recompute(_assign(vectors, cents)), "bounded")
         centroids = cents.select(
             F.col("cid").alias("centroid_id"), F.col("cv").alias("cvec")
         )
@@ -363,14 +364,14 @@ def build_ivf_index(
         # pass — materialize it once so each broadcast consumer (the
         # assignment, the probe scorer, semantic-dedup's rescoring)
         # reuses the tiny result instead of re-running the scan.
-        centroids = (
+        centroids = materialize(
             corpus.orderBy(id_col)
             .limit(n_lists)
             .select(
                 F.col(id_col).alias("centroid_id"),
                 F.col(vec_col).alias("cvec"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "bounded",
         )
     # Argmax-as-aggregate (max over struct(sim, -cid)): map-side partial
     # combining beats a rank-1 window's full sort of the corpus×k rows.
@@ -539,12 +540,14 @@ def knn_ivf_probe(
         F.col("__csim").desc(), F.col("centroid_id")
     )
     probes = (
-        qscored.withColumn("__r", F.row_number().over(wq))
-        .where(F.col("__r") <= n_probe)
-        .select(query_id_col, "__qvec", "centroid_id")
         # materialize the ≤ n_queries·n_probe probe set once (cuts its
         # tiny ranking window out of every downstream plan) ...
-        .localCheckpoint(eager=True)
+        materialize(
+            qscored.withColumn("__r", F.row_number().over(wq))
+            .where(F.col("__r") <= n_probe)
+            .select(query_id_col, "__qvec", "centroid_id"),
+            "bounded",
+        )
         # ... then a trivially-true residual bound marks the build side
         # as SELECTIVE, which is what lets Catalyst plan dynamic
         # partition pruning off the broadcast result (DPP only fires
@@ -696,7 +699,7 @@ def embedding_neardup_pairs(
     # upstream scans, 0 reused), so an upstream pipeline (IVF
     # assignment, casts, the LSH bucket kernel) would run twice; the
     # checkpointed rows are exactly the bytes the join shuffle carries
-    base = base.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    base = materialize(base, "corpus")
     if use_lsh:
         l, r = base.alias("l"), base.alias("r")
         cond = (F.col("l.__bucket") == F.col("r.__bucket")) & (

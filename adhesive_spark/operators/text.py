@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 #: Tiny per-language marker lexicons for the heuristic language scorer.
 #: Deliberately small and SQL-expressible so the same scoring is
@@ -245,10 +245,10 @@ def tfidf_top_terms(
     # grain materialized once (the tokenize-family shape): both the
     # scored side and the doc-frequency marginal read it back instead
     # of re-running the explode kernel
-    tf = (
+    tf = materialize(
         raw.groupBy("id", "token")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.count("*").alias("tf")),
+        "corpus",
     )
     # corpus size as a broadcast scalar relation — keeps the operator
     # fully lazy (no driver-side count() action in the plan build)

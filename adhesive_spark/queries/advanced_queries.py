@@ -5,7 +5,7 @@ deterministic hash sampling, and sketch aggregates.
 
 Every query is oracle-checked against DuckDB except the sketch query
 (approximate by construction → rows-only check, with exact counterparts
-alongside for the judge to eyeball the error).
+alongside, so the error can be read off the output).
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from adhesive_spark.operators.grouped import (
 )
 from adhesive_spark.operators.text import fround, lang_id, quality_score, scaled_long
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 
 def _session_no_col(gap_s: int = 1800):
@@ -475,7 +475,7 @@ def q48_salted_join(spark, sf_dir):
     # value is 2-decimal grained → carry exact integer cents through both
     # aggregation levels (order-independent) and divide once at output;
     # ROUND(SUM(double), 0) here was a coin flip whenever a cents total
-    # ended in .50 (the r01 hash failure).
+    # ended in .50 (it once failed the oracle hash).
     user_stats = events.groupBy("user_id").agg(
         F.count("*").alias("user_events"),
         F.sum(scaled_long(F.col("value"), 2)).alias("user_value_c"),
@@ -942,15 +942,15 @@ def q104_cohort_retention(spark, sf_dir):
     # weeks exactly like the old distinct did) and the active set both
     # derive — events was scanned three times (first-seen agg, distinct
     # activity set, and the grain each consumer re-ran)
-    g = (
+    g = materialize(
         events.select(
             "user_id",
             "ts",
             F.date_trunc("week", F.col("ts")).alias("aw"),
         )
         .groupBy("user_id", "aw")
-        .agg(F.min("ts").alias("mts"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.min("ts").alias("mts")),
+        "corpus",
     )
     # narrow re-agg over the checkpointed grain; its two consumers
     # (cohort sizes, the cell join) re-run only this one exchange
@@ -1075,7 +1075,7 @@ def q109_canonical_dedup(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
-    # star-CC default (r8 judge directive 6) — output-equal to min-label
+    # star-CC default — output-equal to min-label
     # by operator test; O(log² n) rounds on deep near-dup chains.
     comp = connected_components_star(pairs).withColumnRenamed(
         "node", "doc_id"
@@ -2300,9 +2300,12 @@ def q123_mad_outliers(spark, sf_dir):
     # full corpus pass; materialize it once — dev (and through it both
     # the MAD pass and the final filter pass) re-evaluates it otherwise,
     # putting 4 events scans in one plan where the algorithm needs 3
-    med = ev.groupBy("event_type").agg(
-        F.expr("percentile(v_c, 0.5)").alias("med")
-    ).localCheckpoint(eager=True)
+    med = materialize(
+        ev.groupBy("event_type").agg(
+            F.expr("percentile(v_c, 0.5)").alias("med")
+        ),
+        "bounded",
+    )
     dev = ev.join(F.broadcast(med), "event_type").withColumn(
         "dev", F.abs(F.col("v_c") - F.col("med"))
     )
@@ -2336,9 +2339,12 @@ def q124_top_p_sources(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     # materialize the |sources|-row token-mass table once: the rank
     # window and the total broadcast each re-ran the corpus tokenize
-    per = docs.groupBy("source").agg(
-        F.sum(token_count(F.col("text"))).alias("tokens")
-    ).localCheckpoint(eager=True)
+    per = materialize(
+        docs.groupBy("source").agg(
+            F.sum(token_count(F.col("text"))).alias("tokens")
+        ),
+        "bounded",
+    )
     w = Window.orderBy(F.col("tokens").desc(), "source")
     ranked = per.select(
         "source",
@@ -2576,7 +2582,7 @@ def q131_triangle_count(spark, sf_dir):
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    edges = (
+    edges = materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -2585,14 +2591,14 @@ def q131_triangle_count(spark, sf_dir):
         .select(
             F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v")
         )
-        .distinct()
+        .distinct(),
         # The oriented edge list feeds FOUR consumers (degrees + the
         # three-way wedge join): materialize it once (eager, cleaner-
         # owned blocks — same pattern as minhash_lsh_pairs) or Catalyst
         # re-derives the orderkey self-join per consumer (~21 shuffles
         # vs 7 with the boundary). At 100 TB this materialized edge
         # list IS the production artifact every graph pass starts from.
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        "corpus",
     )
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -2859,7 +2865,7 @@ def q152_ann_recall(spark, sf_dir):
     # ONE pass over the brute plan: the old semi-join + separate
     # denominator aggregate consumed `brute` twice, and the exact
     # scoring kernel re-evaluated over the whole corpus per consumer
-    # (r11 dupPy runtime audit). ivf's (query_id, vec_id) rows are
+    # (caught by the dupPy runtime audit). ivf's (query_id, vec_id) rows are
     # unique (top-k per query) — dropDuplicates pins that contract so a
     # future IVF lane emitting a duplicate candidate can never inflate
     # n_hits past the old semi-join's duplicate-proof count; the dedup
@@ -4242,14 +4248,14 @@ def q203_session_incident_overlap(spark, sf_dir):
     # events scan plus BOTH session windows (lag + running sum) — the
     # expensive part of the query. The checkpoint holds the collapsed
     # (user, session, start, end) rows only.
-    sess = (
+    sess = materialize(
         ev.select("user_id", "ts", "event_id", _session_no_col())
         .groupBy("user_id", "session_no")
         .agg(
             F.min(F.unix_micros("ts")).alias("s_start"),
             F.max(F.unix_micros("ts")).alias("s_end"),
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     incidents = ev.where(F.col("event_type") == "error").select(
         F.col("event_id").alias("incident_id"),

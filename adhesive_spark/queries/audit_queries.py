@@ -27,7 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 AUDIT_QUERIES: dict = {}
 AUDIT_ORACLES: dict = {}
@@ -145,7 +145,7 @@ def bradley_terry_report(ev):
             denom[i] += c_ppm * 1000000000000 // (p[i] + p[j])
         # max(...,1) guard: a pair count below total/1e6 ppm-truncates
         # to 0; if EVERY pair for an item does, its denom is 0 and the
-        # MM step would divide by zero (r8 ADVICE item 2). Mirrored in
+        # MM step would divide by zero. Mirrored in
         # _bt_iteration_sql so both engines degrade identically.
         p_raw = {
             i: w_ppm.get(i, 0) * 1000000000000 // max(denom[i], 1)
@@ -802,9 +802,12 @@ def q312_packing_policy_ladder(spark, sf_dir):
     # cost and `per` has THREE aggregate consumers (pad, shelf buckets,
     # splitting fallback) — materialize the lengths once; the re-run
     # per consumer is then a broadcast crossJoin of longs, not the kernel
-    docs = load_table(spark, sf_dir, "documents").select(
-        token_estimate_bpe(F.col("text")).alias("l")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    docs = materialize(
+        load_table(spark, sf_dir, "documents").select(
+            token_estimate_bpe(F.col("text")).alias("l")
+        ),
+        "corpus",
+    )
     ctx = F.broadcast(
         spark.range(1).select(
             F.explode(
@@ -1259,7 +1262,7 @@ def q317_bbit_minhash_audit(spark, sf_dir):
     Scale shape: the signature pass (the q37 machinery) is shared
     through ONE id-keyed repartition that every lane reads back as a
     reused shuffle stage — the kernel previously re-evaluated once per
-    lane per side (6 runtime ArrowEvalPython nodes, r11 dupPy audit);
+    lane per side (6 runtime ArrowEvalPython nodes in the dupPy audit);
     now exactly one. The band self-joins keep plain ENSURE exchanges
     so AQE skew splitting stays armed; buckets stay bounded by the
     band-key space. Capped input (doc_id < 600,
@@ -1464,14 +1467,14 @@ def quantile_matched_report(docs):
     from adhesive_spark.operators.text import quality_score, scaled_long
     from adhesive_spark.sources.registry import ensure_parallelism
 
-    by_val = (
+    by_val = materialize(
         ensure_parallelism(docs).select(
             "source",
             scaled_long(quality_score(F.col("text")), 4).alias("q_s"),
         )
         .groupBy("source", "q_s")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     # per-source threshold: largest q_s whose descending cumulative
     # count reaches ceil(n/4) — distinct-value window only
@@ -1651,8 +1654,8 @@ def q319_halfsample_bootstrap_ci(spark, sf_dir):
         F.expr("sum(c) div count(*)").alias("rep_mean_c")
     )
     wr = Window.partitionBy("event_type").orderBy("rep_mean_c", "b")
-    # Rank cutoffs derive from the PER-TYPE populated replica count (r8
-    # ADVICE item 3): with all 32 lanes populated they are the nearest-rank
+    # Rank cutoffs derive from the PER-TYPE populated replica count:
+    # with all 32 lanes populated they are the nearest-rank
     # p05/p95 (ranks 2 and 31); a sparse type with fewer lanes degrades to
     # the widest in-range band instead of a silent NULL ci_hi_c.
     ranked = rep_means.select(
@@ -1844,7 +1847,7 @@ def q321_cluster_aware_sharding(spark, sf_dir):
     comp = connected_components_star(pairs).withColumnRenamed(
         "node", "doc_id"
     )
-    labeled = (
+    labeled = materialize(
         docs.select("doc_id")
         .join(comp, "doc_id", "left")
         .select(
@@ -1859,11 +1862,11 @@ def q321_cluster_aware_sharding(spark, sf_dir):
             (portable_hash32(F.col("component").cast("string")) % 8).alias(
                 "cluster_shard"
             ),
-        )
+        ),
         # materialization boundary: BOTH policies read this once —
         # without it each policy() aggregate re-executes the whole
         # pair-graph + closure tail
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        "corpus",
     )
 
     def policy(col, name):
@@ -2121,7 +2124,7 @@ AUDIT_ORACLES["q323_feature_staleness_audit"] = """
     stale AS (
       -- pure-integer division: wrapping the diff in floor() makes it
       -- DOUBLE, where DuckDB's // is plain division and the BIGINT
-      -- cast ROUNDS (8451.76 -> 8452) — the r8 off-by-one class
+      -- cast ROUNDS (8451.76 -> 8452), an off-by-one
       SELECT CAST((epoch_us(ts) - epoch_us(prev_ts)) // 60000000
                   AS BIGINT) AS stale_min
       FROM ev
@@ -2167,7 +2170,7 @@ def q324_filter_length_bias(spark, sf_dir):
     from adhesive_spark.operators.text import quality_score, scaled_long
     from adhesive_spark.sources.registry import ensure_parallelism
 
-    by_val = (
+    by_val = materialize(
         ensure_parallelism(load_table(spark, sf_dir, "documents"))
         .select(
             F.expr(
@@ -2180,8 +2183,8 @@ def q324_filter_length_bias(spark, sf_dir):
         # EVERYTHING (threshold, per-octave keeps, overall row) from
         # this checkpointed bounded-domain table (the q318 discipline)
         .groupBy("octave", "q_s")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     gv = by_val.groupBy("q_s").agg(F.sum("cnt").cast("long").alias("cnt"))
     # bounded-domain: distinct quality values (replication-invariant)
@@ -2324,12 +2327,15 @@ def q325_multiprobe_lsh(spark, sf_dir):
             )
         ).alias("p"),
     ).select("query_id", "qvec", "p.bucket", "p.orig")
-    scored = cb.join(F.broadcast(probes), "bucket").select(
-        "query_id",
-        "vec_id",
-        "orig",
-        F.round(cosine(F.col("cvec"), F.col("qvec")), 6).alias("sim"),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    scored = materialize(
+        cb.join(F.broadcast(probes), "bucket").select(
+            "query_id",
+            "vec_id",
+            "orig",
+            F.round(cosine(F.col("cvec"), F.col("qvec")), 6).alias("sim"),
+        ),
+        "corpus",
+    )
 
     def topk(df, mode):
         w = Window.partitionBy("query_id").orderBy(
@@ -2450,15 +2456,15 @@ def q326_hubness_audit(spark, sf_dir):
     # slice-sized rows, but the subtree is the whole all-pairs scoring
     # + top-5 window; its two consumers (histogram, totals) would each
     # re-run that kernel — materialize once
-    occ = (
+    occ = materialize(
         emb.select(F.col("vec_id").alias("cid"))
         .join(
             top5.groupBy("cid").agg(F.count("*").cast("long").alias("n_k")),
             "cid",
             "left",
         )
-        .select(F.coalesce("n_k", F.lit(0)).cast("long").alias("n_k"))
-        .localCheckpoint(eager=True)
+        .select(F.coalesce("n_k", F.lit(0)).cast("long").alias("n_k")),
+        "bounded",
     )
     hist = occ.groupBy("n_k").agg(
         F.count("*").cast("long").alias("n_vectors")
@@ -2661,10 +2667,10 @@ def q328_cms_geometry_ladder(spark, sf_dir):
     # key, so Σ true_cnt per (cfg, r, c) is integer-identical to
     # counting the raw stream, and the 10-way md5 lane fan-out now runs
     # over the 150-key table instead of every stream row (twice).
-    exact = (
+    exact = materialize(
         ev.groupBy("key")
-        .agg(F.count("*").cast("long").alias("true_cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("true_cnt")),
+        "bounded",
     )
 
     lane_structs = []
@@ -2921,7 +2927,7 @@ def q330_ivf_nprobe_ladder(spark, sf_dir):
     probes = qc.withColumn("rq", F.row_number().over(wq)).where(
         F.col("rq") <= 8
     ).select("query_id", "qvec", "centroid_id", "rq")
-    cand = (
+    cand = materialize(
         assigned.join(F.broadcast(probes), "centroid_id")
         .select(
             "query_id",
@@ -2930,12 +2936,15 @@ def q330_ivf_nprobe_ladder(spark, sf_dir):
             F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias(
                 "sim"
             ),
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
-    brute = knn_bruteforce(corpus, queries, k=5).select(
-        "query_id", "vec_id"
-    ).localCheckpoint(eager=True)
+    brute = materialize(
+        knn_bruteforce(corpus, queries, k=5).select(
+            "query_id", "vec_id"
+        ),
+        "bounded",
+    )
     n_q = F.broadcast(brute.agg(F.count("*").alias("n_truth")))
 
     out = None
@@ -3258,10 +3267,10 @@ def q333_ingest_dedup_pressure(spark, sf_dir):
     # per consumer (first-arrival aggregate, max-id broadcast, and the
     # probe side of the join) — three scan+md5 kernels for one corpus.
     # The checkpoint stores the reduced 2-column projection, not text.
-    docs = (
+    docs = materialize(
         ensure_parallelism(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", fingerprint(F.col("text")).alias("fp"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .select("doc_id", fingerprint(F.col("text")).alias("fp")),
+        "corpus",
     )
     first = docs.groupBy("fp").agg(F.min("doc_id").alias("first_id"))
     mx = F.broadcast(docs.agg(F.max("doc_id").alias("max_id")))

@@ -7,7 +7,7 @@ matches.
 
 Extension surface beyond the reference (its only operator is the scalar
 UDF projection, src/fusion.rs:22-80); numbering continues the SURVEY
-§2.4 table (q56 fills the gap left by the r01 numbering).
+§2.4 table (q56 fills a gap in the earlier numbering).
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from adhesive_spark.operators.text import (
     tokens,
 )
 from adhesive_spark.sources.registry import load_table
+from adhesive_spark.sources.registry import materialize
 
 def _injected_text():
     """Deterministic PII injection: the synthetic corpus carries no PII,
@@ -477,7 +478,6 @@ from adhesive_spark.queries.advanced_queries import (  # noqa: E402
     _TOKS,
 )
 from adhesive_spark.queries.pipeline_queries import _byte_from_hex  # noqa: E402
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
 
 _PII_SQL = {name: PII_PATTERNS[name].replace("'", "''") for name in PII_ORDER}
 
@@ -1041,7 +1041,7 @@ def q130_boilerplate_spans(spark, sf_dir):
     from adhesive_spark.operators.dedup import word_shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    # r12 optimization (guide §2.4: two operations keyed the same way
+    # One exchange (guide §2.4: two operations keyed the same way
     # share one exchange): the old shape aggregated doc-frequencies per
     # gram AND re-joined them onto the full occurrence stream — two
     # gram-keyed shuffles of the exploded 5-token STRINGS plus an eager
@@ -1258,9 +1258,12 @@ def q136_length_bucketing(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     # materialize the narrow (doc_id, n_tok) projection once: the two
     # batching strategies each re-ran the corpus tokenize kernel
-    toks = docs.select(
-        "doc_id", token_count(F.col("text")).alias("n_tok")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    toks = materialize(
+        docs.select(
+            "doc_id", token_count(F.col("text")).alias("n_tok")
+        ),
+        "corpus",
+    )
 
     def plan(order_cols, label):
         w = Window.orderBy(*order_cols)
@@ -1467,10 +1470,10 @@ def q146_rarity_score(spark, sf_dir):
     # (word, doc, source, cnt) grain is materialized once; the corpus
     # word count is its sum (identical by associativity) and the
     # per-doc fold re-weights by cnt (Σ_rows rank ≡ Σ_groups rank·cnt).
-    grain = (
+    grain = materialize(
         tok.groupBy("word", "doc_id", "source")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "corpus",
     )
     vocab = grain.groupBy("word").agg(F.sum("cnt").alias("cnt"))
     ranked = vocab.select(
@@ -1634,10 +1637,11 @@ def q148_deletion_propagation(spark, sf_dir):
     # ~1/16 of ids, but the md5 filter cannot push down, so each
     # evaluation is a full scan + fingerprint pass; its two broadcast
     # consumers (fp closure, embedding id list) share one evaluation
-    deny = docs.where(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "a"
-    ).select("doc_id", fingerprint(F.col("text")).alias("fp")).localCheckpoint(
-        eager=True
+    deny = materialize(
+        docs.where(
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) == "a"
+        ).select("doc_id", fingerprint(F.col("text")).alias("fp")),
+        "bounded",
     )
     deny_fp = deny.select("fp").distinct()
     docs_fp = docs.select(
@@ -1766,13 +1770,13 @@ def q150_drift_monitor(spark, sf_dir):
     # once: its two consumers (per-source totals, the ppm difference
     # pass) each re-ran the full tokenize+explode — the corpus-sized
     # kernel — where the word-count table is vocabulary-bounded
-    wc = (
+    wc = materialize(
         tok.groupBy("source", "word")
         .agg(
             F.count_if(F.col("even")).alias("n_even"),
             F.count_if(~F.col("even")).alias("n_odd"),
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     per_source_tot = wc.groupBy("source").agg(
         F.sum("n_even").alias("t_even"), F.sum("n_odd").alias("t_odd")
@@ -1851,10 +1855,10 @@ def q156_oov_rate(spark, sf_dir):
     # membership join-back each re-ran the corpus explode. The
     # (source, word, cnt) grain is materialized once; the global word
     # count is its sum and the per-source totals re-weight by cnt.
-    grain = (
+    grain = materialize(
         tok.groupBy("source", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "corpus",
     )
     vocab = (
         grain.groupBy("word")
@@ -2255,7 +2259,7 @@ def q167_boilerplate_position(spark, sf_dir):
     # once for its two consumers (doc-frequency + the final bucket
     # rollup): the tokenize+window kernel runs exactly once (was 3x,
     # plus a per-doc count aggregate now folded into the array build)
-    grams = (
+    grams = materialize(
         docs.select(
             "doc_id",
             F.explode(
@@ -2268,8 +2272,8 @@ def q167_boilerplate_position(spark, sf_dir):
             "doc_id",
             F.col("w.gram").alias("gram"),
             F.expr("(w.idx * 3) div w.n").alias("pos_bucket"),
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     df_counts = grams.groupBy("gram").agg(
         F.countDistinct("doc_id").alias("gram_docs")
@@ -2735,10 +2739,10 @@ def q199_source_copy_matrix(spark, sf_dir):
     # grain is materialized once; the global argmin is the argmin over
     # per-source minima (doc_id is unique, so minima are distinct) and
     # the holder set is the grain's key pairs.
-    grain = (
+    grain = materialize(
         fps.groupBy("fp", "source")
-        .agg(F.min("doc_id").alias("min_id"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.min("doc_id").alias("min_id")),
+        "corpus",
     )
     origin = grain.groupBy("fp").agg(
         F.min_by("source", "min_id").alias("origin_source")
@@ -2882,10 +2886,10 @@ def q202_cohens_kappa(spark, sf_dir):
     # quantity is an exact integer sum over the |langs|² contingency
     # table, so that tiny table is materialized once and n / agree /
     # marginals derive from it by associativity (identical counts).
-    cont = (
+    cont = materialize(
         pred.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("c")),
+        "bounded",
     )
     totals = cont.agg(
         F.coalesce(F.sum("c"), F.lit(0).cast("long")).alias("n"),

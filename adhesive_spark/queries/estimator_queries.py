@@ -16,7 +16,7 @@ integer arithmetic (ppm/fixed point, division LAST, Spark ``div`` /
 DuckDB ``//``), portable md5 hashing, DECIMAL(38,0)/HUGEINT headroom on
 products of sums, scalar-only output columns, identical column aliases
 in query and oracle, ``ensure_parallelism`` ahead of CPU-dense per-row
-passes, ``localCheckpoint`` on collapsed bounded-domain tables.
+passes, ``materialize`` on collapsed bounded-domain tables.
 
 Reference parity note: the reference engine (milenkovicm/adhesive,
 src/fusion.rs) delegates its relational surface to DataFusion and ships
@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from adhesive_spark.queries.metrology_queries import _NORM, _TOKS, _h32
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 ESTIMATOR_QUERIES: dict = {}
 ESTIMATOR_ORACLES: dict = {}
@@ -199,11 +199,11 @@ def tv_distance_report(docs):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(docs)
-    cnt = (
+    cnt = materialize(
         docs.select("source", F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("source", "w")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.count("*").cast("long").alias("c")),
+        "corpus",
     )
     totals = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     # 190-row pair spine (20 sources), broadcast everywhere
@@ -401,10 +401,10 @@ def q363_bloom_geometry(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     # collapsed member set feeds THREE consumers (bits, n_mem) — pin it
-    fps = (
+    fps = materialize(
         docs.select(fingerprint(F.col("text")).alias("fp"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     geoms = spark.range(1).select(
         F.explode(
@@ -435,13 +435,13 @@ def q363_bloom_geometry(spark, sf_dir):
         )
 
     hspine = F.explode(F.sequence(F.lit(1), F.col("k"))).alias("h")
-    bits = (
+    bits = materialize(
         fps.crossJoin(F.broadcast(geoms))
         .select("m", "k", "fp", hspine)
         .select("m", "k", _pos(F.col("fp")).alias("pos"))
-        .distinct()
+        .distinct(),
         # ≤ Σm rows by construction; reused by fill AND the probe join
-        .localCheckpoint(eager=True)
+        "bounded",
     )
     fill = bits.groupBy("m", "k").agg(
         F.count("*").cast("long").alias("bits_set")
@@ -685,10 +685,10 @@ def runs_test_report(docs):
     # its two consumers (cumulative median walk, per-source totals) each
     # re-ran the full corpus aggregate; the table is bounded by the
     # value domain, never the corpus
-    cnts = (
+    cnts = materialize(
         docs.groupBy("source", "n_chars")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("c")),
+        "bounded",
     )
     wcum = (
         Window.partitionBy("source")
@@ -834,13 +834,13 @@ def q366_ngram_novelty(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    grams = (
+    grams = materialize(
         docs.select(
             "source",
             F.explode(word_shingles(F.col("text"), 5)).alias("g"),
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     per_gram = grams.groupBy("g").agg(
         F.count("*").cast("long").alias("n_src")
@@ -925,7 +925,7 @@ def q367_decile_lift(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    by_val = (
+    by_val = materialize(
         docs.select(
             scaled_long(quality_score(F.col("text")), 4).alias("q_s"),
             (
@@ -938,8 +938,8 @@ def q367_decile_lift(spark, sf_dir):
         .agg(
             F.count("*").cast("long").alias("cnt"),
             F.sum("pos").cast("long").alias("pos"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     tot = F.broadcast(
         by_val.agg(
@@ -1128,19 +1128,22 @@ def q368_jl_distortion(spark, sf_dir):
             " x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))"
         ).alias("mv"),
     )
-    proj = emb.select(
-        "vec_id",
-        "mv",
-        F.expr(
-            # the sign matrix is the transform's INPUT (evaluated once),
-            # never referenced from inside a lambda — element_at(S, j)
-            # in the lambda body would rebuild the 1024-literal array
-            # per element (measured 100× slower)
-            f"transform({_JL_S_SPARK}, row -> aggregate("
-            f" zip_with(mv, row, (x, s) -> x * s),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v))"
-        ).alias("pv"),
-    ).localCheckpoint(eager=True)
+    proj = materialize(
+        emb.select(
+            "vec_id",
+            "mv",
+            F.expr(
+                # the sign matrix is the transform's INPUT (evaluated once),
+                # never referenced from inside a lambda — element_at(S, j)
+                # in the lambda body would rebuild the 1024-literal array
+                # per element (measured 100× slower)
+                f"transform({_JL_S_SPARK}, row -> aggregate("
+                f" zip_with(mv, row, (x, s) -> x * s),"
+                f" CAST(0 AS BIGINT), (acc, v) -> acc + v))"
+            ).alias("pv"),
+        ),
+        "bounded",
+    )
     a = proj.select(
         F.col("vec_id").alias("ida"),
         F.col("mv").alias("mva"),
@@ -1263,15 +1266,15 @@ def q369_contribution_bounding(spark, sf_dir):
     5 rows.
     """
     ev = load_table(spark, sf_dir, "events")
-    per_user = (
+    per_user = materialize(
         ev.select(
             "event_type",
             "user_id",
             F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
         )
         .groupBy("event_type", "user_id")
-        .agg(F.sum("cents").cast("long").alias("tot"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("tot")),
+        "corpus",
     )
     # exact lower p95 of per-user totals, per type (distinct-value cum)
     cnts = per_user.groupBy("event_type", "tot").agg(
@@ -1561,10 +1564,10 @@ def decile_psi_report(docs):
     shared with the stress harness (distinct-value decile table is
     replication-invariant)."""
     docs = docs.select("source", "n_chars")
-    by_val = (
+    by_val = materialize(
         docs.groupBy("n_chars")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     tot = F.broadcast(
         by_val.agg(F.sum("cnt").cast("long").alias("n_all"))
@@ -1590,10 +1593,10 @@ def decile_psi_report(docs):
         "source", "decile"
     )
     # the ONE corpus-sized aggregate; everything below derives from it
-    obs = (
+    obs = materialize(
         labeled.groupBy("source", "decile")
-        .agg(F.count("*").cast("long").alias("o"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("o")),
+        "bounded",
     )
     exp = obs.groupBy("decile").agg(F.sum("o").cast("long").alias("e"))
     n_src = obs.groupBy("source").agg(
@@ -1840,13 +1843,13 @@ def q374_birthday_collisions(spark, sf_dir):
     from adhesive_spark.operators.text import fingerprint
 
     docs = load_table(spark, sf_dir, "documents")
-    fps = (
+    fps = materialize(
         docs.select(fingerprint(F.col("text")).alias("fp"))
         .distinct()
         .select(
             portable_hash32(F.concat(F.lit("bd:"), F.col("fp"))).alias("h")
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     bspine = spark.range(1).select(
         F.explode(
@@ -1941,7 +1944,7 @@ def q375_lorenz_deciles(spark, sf_dir):
     (bounded by the customer count); the table is 10 rows.
     """
     orders = load_table(spark, sf_dir, "orders")
-    per_cust = (
+    per_cust = materialize(
         orders.select(
             "o_custkey",
             F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias(
@@ -1949,8 +1952,8 @@ def q375_lorenz_deciles(spark, sf_dir):
             ),
         )
         .groupBy("o_custkey")
-        .agg(F.sum("cents").cast("long").alias("tot"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("tot")),
+        "corpus",
     )
     by_val = per_cust.groupBy("tot").agg(
         F.count("*").cast("long").alias("cnt")
@@ -2086,7 +2089,7 @@ def q376_topk_sample_stability(spark, sf_dir):
             .orderBy(F.desc("c"), F.asc("w"))
             .limit(k)
         )
-    full = _topk(docs).localCheckpoint(eager=True)
+    full = materialize(_topk(docs), "bounded")
     half = _topk(
         docs.where(
             portable_hash32(
@@ -2186,7 +2189,7 @@ def q377_simpson_reversal(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    moments = (
+    moments = materialize(
         docs.select(
             "source",
             F.col("n_chars").cast("long").alias("x"),
@@ -2198,8 +2201,8 @@ def q377_simpson_reversal(spark, sf_dir):
             F.sum("x").cast("long").alias("sx"),
             F.sum("y").cast("long").alias("sy"),
             F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     pooled = F.broadcast(
         moments.agg(
@@ -2321,7 +2324,7 @@ def q378_wip_profile(spark, sf_dir):
         )
     )
     spans = orders.join(ends, "o_orderkey").select("start_d", "end_d")
-    deltas = (
+    deltas = materialize(
         spans.select(F.col("start_d").alias("d"), F.lit(1).alias("delta"))
         .unionByName(
             spans.select(
@@ -2329,8 +2332,8 @@ def q378_wip_profile(spark, sf_dir):
             )
         )
         .groupBy("d")
-        .agg(F.sum("delta").cast("long").alias("delta"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum("delta").cast("long").alias("delta")),
+        "bounded",
     )
     # bounded-domain: distinct boundary days only (replication-invariant)
     wd = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
@@ -2479,7 +2482,7 @@ def q379_fulfillment_hazard(spark, sf_dir):
         spans.agg(F.max("end_d").cast("long").alias("hmax"))
     )
     # duration: fulfilled -> ship latency; censored -> horizon - start
-    durs = (
+    durs = materialize(
         spans.crossJoin(horizon)
         .select(
             "event",
@@ -2494,8 +2497,8 @@ def q379_fulfillment_hazard(spark, sf_dir):
         .agg(
             F.sum("event").cast("long").alias("d"),
             F.count("*").cast("long").alias("all_t"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     n_total = F.broadcast(
         durs.agg(F.sum("all_t").cast("long").alias("n0"))
@@ -2608,7 +2611,7 @@ def q380_eb_shrinkage(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    per = (
+    per = materialize(
         docs.select(
             "source", scaled_long(quality_score(F.col("text")), 4).alias("q")
         )
@@ -2617,8 +2620,8 @@ def q380_eb_shrinkage(spark, sf_dir):
             F.count("*").cast("long").alias("n"),
             F.sum("q").cast("long").alias("sq"),
             F.sum(F.col("q") * F.col("q")).cast("long").alias("qq"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     grand = F.broadcast(
         per.agg(
@@ -2895,7 +2898,7 @@ def q382_design_effect(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    per = (
+    per = materialize(
         docs.select(
             "source", scaled_long(quality_score(F.col("text")), 4).alias("q")
         )
@@ -2904,8 +2907,8 @@ def q382_design_effect(spark, sf_dir):
             F.count("*").cast("long").alias("n"),
             F.sum("q").cast("long").alias("sq"),
             F.sum(F.col("q") * F.col("q")).cast("long").alias("qq"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     grand = F.broadcast(
         per.agg(
@@ -3040,10 +3043,10 @@ def q383_load_factor(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("CAST(unix_timestamp(ts) div 3600 AS BIGINT)").alias("h")
     )
-    hourly = (
+    hourly = materialize(
         ev.groupBy("h")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("c")),
+        "bounded",
     )
     # p95 busy-hour via distinct-count-value cumulative
     by_val = hourly.groupBy("c").agg(
@@ -3147,7 +3150,7 @@ def q384_priority_slo(spark, sf_dir):
         .agg(F.max("l_shipdate").alias("end_date"))
         .withColumnRenamed("l_orderkey", "o_orderkey")
     )
-    lat = (
+    lat = materialize(
         orders.join(ends, "o_orderkey")
         .select(
             F.col("o_orderpriority").alias("priority"),
@@ -3156,8 +3159,8 @@ def q384_priority_slo(spark, sf_dir):
             .alias("lat_d"),
         )
         .groupBy("priority", "lat_d")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("c")),
+        "bounded",
     )
     n_per = lat.groupBy("priority").agg(
         F.sum("c").cast("long").alias("n_orders"),
@@ -3268,7 +3271,7 @@ def rfm_report(orders):
     horizon = F.broadcast(
         orders.agg(F.max("o_orderdate").alias("h_date"))
     )
-    per_cust = (
+    per_cust = materialize(
         orders.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_order"),
@@ -3285,8 +3288,8 @@ def rfm_report(orders):
             .alias("recency_d"),
             "freq",
             "monet",
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     n_all = F.broadcast(
         per_cust.agg(F.count("*").cast("long").alias("n_cust_all"))
@@ -3593,10 +3596,13 @@ def q388_session_gap_sweep(spark, sf_dir):
         "user_id", F.expr("CAST(unix_timestamp(ts) AS BIGINT)").alias("es")
     )
     wu = Window.partitionBy("user_id").orderBy("es")
-    gaps = ev.select(
-        "user_id",
-        (F.col("es") - F.lag("es").over(wu)).alias("gap_s"),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    gaps = materialize(
+        ev.select(
+            "user_id",
+            (F.col("es") - F.lag("es").over(wu)).alias("gap_s"),
+        ),
+        "corpus",
+    )
     spine = spark.range(1).select(
         F.explode(
             F.array(
@@ -3688,7 +3694,7 @@ def q389_order_interarrival(spark, sf_dir):
         .cast("long")
         .alias("d"),
     )
-    gaps = (
+    gaps = materialize(
         orders.select(
             (F.col("d") - F.lag("d").over(
                 Window.partitionBy("o_custkey").orderBy("d")
@@ -3696,8 +3702,8 @@ def q389_order_interarrival(spark, sf_dir):
         )
         .where(F.col("gap_d").isNotNull())
         .groupBy("gap_d")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("c")),
+        "bounded",
     )
     tot = F.broadcast(
         gaps.agg(
@@ -3965,7 +3971,7 @@ def q392_cohort_retention(spark, sf_dir):
     (cohort, k) count over that collapsed table — never re-scans
     orders.
     """
-    om = (
+    om = materialize(
         load_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
@@ -3973,8 +3979,8 @@ def q392_cohort_retention(spark, sf_dir):
                 F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
             ).cast("long").alias("ym"),
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     cohorts = om.groupBy("o_custkey").agg(
         F.min("ym").cast("long").alias("cohort_ym")
@@ -4061,10 +4067,10 @@ def q393_partition_size_planner(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    per_key = (
+    per_key = materialize(
         docs.groupBy("source")
-        .agg(F.sum("n_chars").cast("long").alias("bytes"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum("n_chars").cast("long").alias("bytes")),
+        "bounded",
     )
     spine = spark.range(1).select(
         F.explode(
@@ -4168,10 +4174,10 @@ def q394_watermark_planner(spark, sf_dir):
             F.lit(0),
         ).alias("late_s")
     )
-    by_val = (
+    by_val = materialize(
         late.groupBy("late_s")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("c")),
+        "bounded",
     )
     tot = F.broadcast(
         by_val.agg(
@@ -4265,10 +4271,10 @@ def q395_winsor_impact(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("c")
     )
-    by_val = (
+    by_val = materialize(
         ev.groupBy("c")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     tot = F.broadcast(
         by_val.agg(
@@ -4546,13 +4552,13 @@ def q398_zipf_product_ladder(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    top = (
+    top = materialize(
         docs.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("f"))
         .orderBy(F.desc("f"), F.asc("w"))
-        .limit(100)
-        .localCheckpoint(eager=True)
+        .limit(100),
+        "bounded",
     )
     # bounded-domain: 100 top-token rows only
     wr = Window.orderBy(F.desc("f"), F.asc("w"))
@@ -4635,13 +4641,13 @@ def q399_discount_response(spark, sf_dir):
         F.expr("CAST(ROUND(l_discount * 100, 0) AS BIGINT)").alias("d_c"),
         F.expr("CAST(ROUND(l_quantity * 100, 0) AS BIGINT)").alias("q_c"),
     )
-    bands = (
+    bands = materialize(
         li.groupBy("d_c")
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("q_c").cast("long").alias("sq"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     tot = F.broadcast(
         bands.agg(
@@ -4870,11 +4876,14 @@ def q401_dow_anova(spark, sf_dir):
     # materialize the 7-row moment table once: grand (used twice) and
     # ssb each re-ran the full events aggregate — three corpus passes
     # for one 7-row table
-    per = ev.groupBy("dow").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("c").cast("long").alias("s"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("ss"),
-    ).localCheckpoint(eager=True)
+    per = materialize(
+        ev.groupBy("dow").agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum("c").cast("long").alias("s"),
+            F.sum(F.col("c") * F.col("c")).cast("long").alias("ss"),
+        ),
+        "bounded",
+    )
     grand = F.broadcast(
         per.agg(
             F.sum("n").cast("long").alias("nn"),
@@ -4988,7 +4997,7 @@ def q402_mix_shift_canary(spark, sf_dir):
             ).alias("mid_es")
         )
     )
-    cells = (
+    cells = materialize(
         ev.crossJoin(mid)
         .groupBy("event_type")
         .agg(
@@ -4998,8 +5007,8 @@ def q402_mix_shift_canary(spark, sf_dir):
             F.count_if(F.col("es") >= F.col("mid_es"))
             .cast("long")
             .alias("n2"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     tots = F.broadcast(
         cells.agg(
@@ -5124,7 +5133,7 @@ def q403_keep_policy_divergence(spark, sf_dir):
     # tokenize + quality_score + the span-md5 explode — the query's
     # whole kernel cost, twice. The checkpoint stores the same narrow
     # rows the distinct's shuffle writes.
-    spans = (
+    spans = materialize(
         scored.select(
             "doc_id",
             "q",
@@ -5137,8 +5146,8 @@ def q403_keep_policy_divergence(spark, sf_dir):
             ).alias("fp"),
         )
         .where(F.size("toks") >= 20)
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     per = (
         spans.groupBy("fp")
@@ -5248,10 +5257,10 @@ def q404_autoscale_lag_cost(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("CAST(unix_timestamp(ts) div 3600 AS BIGINT)").alias("h")
     )
-    hourly = (
+    hourly = materialize(
         ev.groupBy("h")
-        .agg(F.count("*").cast("long").alias("load"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("load")),
+        "bounded",
     )
     # bounded-domain: observed hours only (replication-invariant)
     wh = Window.orderBy("h")
@@ -5398,11 +5407,11 @@ def q406_degree_assortativity(spark, sf_dir):
     Scale shape: edges collapse to distinct once; two degree aggregates
     rejoin via broadcast; one moment aggregate ends it. Never node².
     """
-    edges = (
+    edges = materialize(
         load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     pdeg = edges.groupBy("l_partkey").agg(
         F.count("*").cast("long").alias("dp")
@@ -5502,14 +5511,14 @@ def q407_shingle_size_ladder(spark, sf_dir):
         load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     )
     rungs = (2, 3, 5)
-    sh = (
+    sh = materialize(
         docs.select(
             "doc_id",
             F.explode(word_shingles_multi(F.col("text"), rungs)).alias("g"),
         )
         .select("doc_id", F.col("g.n").alias("n"), F.col("g.s").alias("s"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     sizes = sh.groupBy("n", "doc_id").agg(
         F.count("*").cast("long").alias("sz")
@@ -5655,7 +5664,7 @@ def q408_quantile_control_chart(spark, sf_dir):
     """
     ev = load_table(spark, sf_dir, "events")
     start = F.broadcast(ev.agg(F.min("ts").alias("t0")))
-    weekly = (
+    weekly = materialize(
         ev.crossJoin(start)
         .select(
             (F.datediff(F.col("ts"), F.col("t0")) / 7)
@@ -5664,8 +5673,8 @@ def q408_quantile_control_chart(spark, sf_dir):
             F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("c"),
         )
         .groupBy("w", "c")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     n_per = weekly.groupBy("w").agg(
         F.sum("cnt").cast("long").alias("n")

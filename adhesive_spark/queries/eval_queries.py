@@ -24,7 +24,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 EVAL_QUERIES: dict = {}
 EVAL_ORACLES: dict = {}
@@ -252,7 +252,7 @@ def q258_bloom_join_prefilter(spark, sf_dir):
             ]
         )
 
-    bloom = (
+    bloom = materialize(
         build.select(F.explode(positions("bkey")).alias("pos"))
         .select(
             F.expr("pos div 62").alias("word_idx"),
@@ -261,12 +261,12 @@ def q258_bloom_join_prefilter(spark, sf_dir):
             ),
         )
         .groupBy("word_idx")
-        .agg(F.expr("bit_or(bit)").alias("w"))
+        .agg(F.expr("bit_or(bit)").alias("w")),
         # ≤1024 rows by construction; materialized ONCE so the probe
         # broadcast and the bits_set audit don't each re-run the build
         # scan + 3×md5 explode + bit_or aggregate (the filter build is
         # the pattern's whole point: pay it once)
-        .localCheckpoint(eager=True)
+        "bounded",
     )
 
     probe = (
@@ -494,13 +494,13 @@ def q260_grid_density_clusters(spark, sf_dir):
             f" AS BIGINT) + 1000000) div {_GRID_CELL_MILLI}"
         ).alias("cy"),
     )
-    core = (
+    core = materialize(
         pts.groupBy("cx", "cy")
         .agg(F.count("*").cast("long").alias("n"))
         .where(F.col("n") >= _GRID_MINPTS)
-        .withColumn("cell_id", F.col("cx") * 100000 + F.col("cy"))
-        .localCheckpoint(eager=True)  # feeds edges twice + the rollup
-    )
+        .withColumn("cell_id", F.col("cx") * 100000 + F.col("cy")),
+        "bounded",
+    )  # feeds edges twice + the rollup
     offsets = F.array(
         *[
             F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -607,11 +607,14 @@ def q261_stump_split_gain(spark, sf_dir):
         )
     )
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
-    cum = per.select(
-        "cents",
-        F.sum("p_s").over(w).alias("p_l"),
-        F.sum("n_s").over(w).alias("n_l"),
-    ).localCheckpoint(eager=True)  # feeds the spine probe + the join-back
+    cum = materialize(
+        per.select(
+            "cents",
+            F.sum("p_s").over(w).alias("p_l"),
+            F.sum("n_s").over(w).alias("n_l"),
+        ),
+        "bounded",
+    )  # feeds the spine probe + the join-back
     tot = cum.agg(
         F.max(F.col("p_l")).alias("p_tot"), F.max(F.col("n_l")).alias("n_tot")
     )
@@ -816,25 +819,12 @@ def link_prediction_report(edges):
     out so tools/stress.py can ladder the fanout²-bounded pair join on
     replicated graphs without going through a parquet table.
 
-    The checkpoint is pinned to SERIALIZED storage (r12,
-    ``MEMORY_AND_DISK`` — which in PySpark is the serialized level):
-    at the deserialized default the eager localCheckpoint held the
-    edge set as JVM objects, and Spark's disk-block read path
-    re-inflates evicted blocks as deserialized VALUES
-    (`maybeCacheDiskValuesInMemory`), so the 10 000× rung (590 M
-    edges) OOMed a 48 g heap on the WORKING SET, not the compute.
-    Serialized blocks are ~order-of-magnitude smaller, overflow to
-    disk, and re-cache as BYTES (bounded) — while keeping the
-    one-materialization boundary the three consumers share. The two
-    rejected designs are both measured: dropping the checkpoint is
-    2.5× slower at bench scale (the triple `distinct` subtree does NOT
-    runtime-reuse its exchange), DISK_ONLY costs ~1 s of disk
-    round-trip per bench rep."""
-    from pyspark import StorageLevel
-
-    edges = edges.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    The edge set is materialized once at corpus grain (see
+    :func:`~adhesive_spark.sources.registry.materialize` for the
+    storage level) and its three consumers share that boundary.
+    Dropping the boundary was measured 2.5× slower at bench scale: the
+    triple `distinct` subtree does NOT runtime-reuse its exchange."""
+    edges = materialize(edges, "corpus")
     part_deg = edges.groupBy("p").agg(
         F.count("*").cast("long").alias("pd")
     )
@@ -842,17 +832,19 @@ def link_prediction_report(edges):
     # one row per supplier — the same bytes the two F.broadcast
     # consumers below already collect; materialized once so the degree
     # aggregate scans the edge set once instead of once per broadcast
-    supp_deg = edges.groupBy("s").agg(
-        F.count("*").cast("long").alias("sd")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
-    # hub parts dropped BEFORE pair generation; merge-pinned (r12):
+    supp_deg = materialize(
+        edges.groupBy("s").agg(
+            F.count("*").cast("long").alias("sd")
+        ),
+        "corpus",
+    )
+    # hub parts dropped BEFORE pair generation; merge-pinned:
     # part_deg is corpus-scaled (one row per part), so it is never
     # contractually broadcastable — yet its rows are narrow and
     # replication-compressible enough that AQE's compressed-size
     # heuristic elected broadcast at the 10 000× rung (20 M rows) and
     # the broadcast COLLECT blew spark.driver.maxResultSize. Same
-    # hazard class as the probe_minhash_index pin (see ROUND_NOTES
-    # r12); at honest production sizes this join was never going to
+    # hazard class as the probe_minhash_index pin; at honest production sizes this join was never going to
     # broadcast, so the pin costs only a tiny-input sort.
     e = edges.join(small.hint("merge"), "p")
     pairs = (
@@ -961,7 +953,7 @@ def q264_dow_seasonality(spark, sf_dir):
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
     ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
-    daily = daily.localCheckpoint(eager=True)  # feeds rollup + totals
+    daily = materialize(daily, "bounded")  # feeds rollup + totals
     tot = daily.agg(
         F.sum("rev").cast("long").alias("total"),
         F.count("*").cast("long").alias("n_days_total"),
@@ -1122,10 +1114,13 @@ def q266_abtest_srm(spark, sf_dir):
     )
     # materialize the 2-row arm table once: the a0/a1 pivot sides each
     # re-ran the full per-user aggregate over the event stream
-    arms = per_user.groupBy("arm").agg(
-        F.count("*").cast("long").alias("users"),
-        F.sum("purchases").cast("long").alias("purchases"),
-    ).localCheckpoint(eager=True)
+    arms = materialize(
+        per_user.groupBy("arm").agg(
+            F.count("*").cast("long").alias("users"),
+            F.sum("purchases").cast("long").alias("purchases"),
+        ),
+        "bounded",
+    )
     a0 = arms.where(F.col("arm") == 0).select(
         F.col("users").alias("u0"), F.col("purchases").alias("p0")
     )
@@ -1200,7 +1195,7 @@ def q267_negative_sampling(spark, sf_dir):
     # distinct (user, item) click set: three consumers (item vocabulary,
     # user list, the anti-join) each re-ran the scan + props regexp —
     # materialize it once (the q250 basket_affinity shape)
-    clicks = (
+    clicks = materialize(
         ev.where(F.col("event_type") == "click")
         .select(
             "user_id",
@@ -1209,8 +1204,8 @@ def q267_negative_sampling(spark, sf_dir):
                 " AS BIGINT)"
             ).alias("item"),
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     items = clicks.select("item").distinct()
     users = clicks.select("user_id").where(F.col("user_id") < 20).distinct()
@@ -1290,7 +1285,7 @@ def q268_changepoint_segments(spark, sf_dir):
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
     ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
-    daily = daily.localCheckpoint(eager=True)  # feeds split + segments
+    daily = materialize(daily, "bounded")  # feeds split + segments
     mean = daily.agg(
         F.expr("CAST(sum(rev) div count(*) AS BIGINT)").alias("mean_rev")
     )
@@ -1437,7 +1432,7 @@ def q269_vocab_coverage(spark, sf_dir):
         .alias("rank"),
         F.sum("cnt").over(w).alias("cum_cnt"),
     )
-    ranked = ranked.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)  # feeds 2 consumers
+    ranked = materialize(ranked, "corpus")  # feeds 2 consumers
     tot = ranked.agg(
         F.max("cum_cnt").alias("total_occ"),
         F.max("rank").cast("long").alias("n_types"),
@@ -1781,9 +1776,12 @@ def q272_quantile_treatment_effect(spark, sf_dir):
         .orderBy("cents")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = per.select(
-        "arm", "cents", F.sum("cnt").over(w).alias("cum")
-    ).localCheckpoint(eager=True)  # feeds totals + both quantile probes
+    cum = materialize(
+        per.select(
+            "arm", "cents", F.sum("cnt").over(w).alias("cum")
+        ),
+        "bounded",
+    )  # feeds totals + both quantile probes
     tot = cum.groupBy("arm").agg(F.max("cum").cast("long").alias("n_arm"))
     spine = spark.range(0, 2).select(
         F.expr("CAST(CASE WHEN id = 0 THEN 500 ELSE 900 END AS BIGINT)").alias(
@@ -1885,12 +1883,12 @@ def q274_grid_clusters_star(spark, sf_dir):
             f" AS BIGINT) + 1000000) div {_GRID_CELL_MILLI}"
         ).alias("cy"),
     )
-    core = (
+    core = materialize(
         pts.groupBy("cx", "cy")
         .agg(F.count("*").cast("long").alias("n"))
         .where(F.col("n") >= _GRID_MINPTS)
-        .withColumn("cell_id", F.col("cx") * 100000 + F.col("cy"))
-        .localCheckpoint(eager=True)
+        .withColumn("cell_id", F.col("cx") * 100000 + F.col("cy")),
+        "bounded",
     )
     offsets = F.array(
         *[
@@ -1966,7 +1964,7 @@ def q275_theil_sen_trend(spark, sf_dir):
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
         F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
     ).groupBy("day").agg(F.sum("cents").cast("long").alias("rev"))
-    daily = daily.localCheckpoint(eager=True)  # tiny; feeds pairs + count
+    daily = materialize(daily, "bounded")  # tiny; feeds pairs + count
     a, b = daily.alias("a"), daily.alias("b")
     slopes = (
         a.join(b, F.col("a.day") < F.col("b.day"))
@@ -2060,19 +2058,19 @@ def q276_bfs_frontier(spark, sf_dir):
     e = edges.join(
         part_deg.where(F.col("pd") <= _LP_MAX_PART_DEG), "p"
     )
-    adj = (
+    adj = materialize(
         e.alias("a")
         .join(e.alias("b"), "p")
         .where(F.col("a.s") != F.col("b.s"))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)  # feeds 3 BFS rounds + node count
-    )
+        .distinct(),
+        "corpus",
+    )  # feeds 3 BFS rounds + node count
     nodes = adj.select(F.col("u").alias("node")).distinct()
     src = nodes.agg(F.min("node").alias("node")).withColumn(
         "dist", F.lit(0).cast("long")
     )
-    dist = src.localCheckpoint(eager=True)
+    dist = materialize(src, "bounded")
     for hop in (1, 2, 3):
         frontier = (
             adj.join(
@@ -2080,11 +2078,11 @@ def q276_bfs_frontier(spark, sf_dir):
             )
             .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
-        dist = (
+        dist = materialize(
             dist.unionByName(frontier)
             .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .agg(F.min("dist").cast("long").alias("dist")),
+            "corpus",
         )
     reached = dist.groupBy("dist").agg(
         F.count("*").cast("long").alias("n_suppliers")

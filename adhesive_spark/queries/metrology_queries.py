@@ -15,7 +15,7 @@ integer arithmetic (ppm/fixed point, division LAST, Spark ``div`` /
 DuckDB ``//``), portable md5 hashing, DECIMAL(38,0)/HUGEINT headroom on
 products of sums, scalar-only output columns, identical column aliases
 in query and oracle, ``ensure_parallelism`` ahead of CPU-dense per-row
-passes, ``localCheckpoint`` on collapsed bounded-domain tables.
+passes, ``materialize`` on collapsed bounded-domain tables.
 
 Reference parity note: the reference engine (milenkovicm/adhesive,
 src/fusion.rs) delegates its relational surface to DataFusion and ships
@@ -28,7 +28,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 METROLOGY_QUERIES: dict = {}
 METROLOGY_ORACLES: dict = {}
@@ -75,7 +75,7 @@ def q335_domain_reweight(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = load_table(spark, sf_dir, "documents")
-    dom = (
+    dom = materialize(
         ensure_parallelism(docs)
         .select(
             "source", scaled_long(quality_score(F.col("text")), 4).alias("q")
@@ -84,8 +84,8 @@ def q335_domain_reweight(spark, sf_dir):
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("q").cast("long").alias("sq"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     tot = F.broadcast(
         dom.agg(
@@ -106,25 +106,28 @@ def q335_domain_reweight(spark, sf_dir):
         ).alias("deficit_num"),
         F.expr("CAST(n AS DECIMAL(38,0)) * nn").alias("deficit_den"),
     )
-    base = base.select(
-        "source",
-        "n_docs",
-        "base_ppm",
-        F.expr(
-            "CAST(deficit_num * 100 div deficit_den AS BIGINT)"
-        ).alias("excess_ppm"),
-    ).localCheckpoint(eager=True)
+    base = materialize(
+        base.select(
+            "source",
+            "n_docs",
+            "base_ppm",
+            F.expr(
+                "CAST(deficit_num * 100 div deficit_den AS BIGINT)"
+            ).alias("excess_ppm"),
+        ),
+        "bounded",
+    )
     w = base.select("source", F.col("base_ppm").alias("w"))
     for _ in range(3):
         boosted = w.join(
             F.broadcast(base.select("source", "excess_ppm")), "source"
         ).selectExpr("source", "w * (1000000 + excess_ppm) div 1000000 AS w")
-        w = (
+        w = materialize(
             boosted.crossJoin(
                 F.broadcast(boosted.agg(F.sum("w").alias("sw")))
             )
-            .selectExpr("source", "w * 1000000 div sw AS w")
-            .localCheckpoint(eager=True)
+            .selectExpr("source", "w * 1000000 div sw AS w"),
+            "bounded",
         )
     return base.join(w, "source").select(
         "source",
@@ -294,10 +297,10 @@ def q337_priority_sample(spark, sf_dir):
     prios = docs.withColumn("u", u).selectExpr(
         "doc_id", "w", "w * 1000000 div u AS prio"
     )
-    top = (
+    top = materialize(
         prios.orderBy(F.col("prio").desc(), "doc_id")
-        .limit(k + 1)
-        .localCheckpoint(eager=True)
+        .limit(k + 1),
+        "bounded",
     )
     # bounded-domain: 33 rows only — single-partition window is safe
     wr = Window.orderBy(F.col("prio").desc(), F.col("doc_id"))
@@ -380,7 +383,7 @@ def q338_neyman_allocation(spark, sf_dir):
 
     budget = 10000
     docs = load_table(spark, sf_dir, "documents")
-    strata = (
+    strata = materialize(
         ensure_parallelism(docs)
         .select(
             "source", scaled_long(quality_score(F.col("text")), 4).alias("q")
@@ -390,8 +393,8 @@ def q338_neyman_allocation(spark, sf_dir):
             F.count("*").cast("long").alias("n"),
             F.sum("q").cast("long").alias("s1"),
             F.sum(F.col("q") * F.col("q")).cast("long").alias("s2"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     sig = strata.select(
         "source",
@@ -565,14 +568,14 @@ def ks_drift_report(docs):
     from adhesive_spark.operators.text import quality_score, scaled_long
     from adhesive_spark.sources.registry import ensure_parallelism
 
-    by_val = (
+    by_val = materialize(
         ensure_parallelism(docs)
         .select(
             "source", scaled_long(quality_score(F.col("text")), 4).alias("q_s")
         )
         .groupBy("source", "q_s")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     vals = by_val.select("q_s").distinct()
     srcs = by_val.groupBy("source").agg(
@@ -629,7 +632,7 @@ def ks_drift_report(docs):
         # decimal operands — so the decoded d_num must be re-widened
         # before the ppm multiply: at the 10 000× stress rung d_num
         # crosses ~9.2e12 and (long)·1000000 overflows ANSI int64
-        # (caught by the r12 ladder; DuckDB's HUGEINT oracle twin was
+        # (caught by the stress ladder; DuckDB's HUGEINT oracle twin was
         # never exposed). Exact integers are unchanged where the long
         # path fit.
         F.expr(
@@ -728,14 +731,14 @@ def mannwhitney_report(docs):
     from adhesive_spark.operators.text import quality_score, scaled_long
     from adhesive_spark.sources.registry import ensure_parallelism
 
-    by_val = (
+    by_val = materialize(
         ensure_parallelism(docs)
         .select(
             "source", scaled_long(quality_score(F.col("text")), 4).alias("q_s")
         )
         .groupBy("source", "q_s")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     gv = by_val.groupBy("q_s").agg(F.sum("cnt").cast("long").alias("g"))
     srcs = by_val.groupBy("source").agg(
@@ -873,15 +876,15 @@ def q342_dead_dimensions(spark, sf_dir):
     # materialize the 64-row per-dimension moment table once: the
     # variance-total broadcast and the final share pass each re-ran the
     # quantize kernel + posexplode over the whole corpus
-    per_dim = (
+    per_dim = materialize(
         quant.select(F.posexplode("q").alias("d", "x"))
         .groupBy("d")
         .agg(
             F.sum("x").cast("long").alias("s1"),
             F.sum(F.col("x") * F.col("x")).cast("long").alias("s2"),
             F.count("*").cast("long").alias("n"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     var = per_dim.select(
         F.col("d").cast("long").alias("d"),
@@ -956,7 +959,7 @@ def q343_t_closeness(spark, sf_dir):
     from adhesive_spark.sources.registry import ensure_parallelism
 
     docs = load_table(spark, sf_dir, "documents")
-    cells = (
+    cells = materialize(
         ensure_parallelism(docs)
         .select(
             "lang",
@@ -970,8 +973,8 @@ def q343_t_closeness(spark, sf_dir):
             .alias("bin"),
         )
         .groupBy("lang", "source", "len_bucket", "bin")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     groups = cells.groupBy("lang", "source", "len_bucket").agg(
         F.sum("cnt").cast("long").alias("n_rows")
@@ -1140,7 +1143,7 @@ def tfcos_allpairs_report(tf, df_cap: int = 50):
     """The q344 core over a caller-supplied ``(doc_id, tok, tf)`` table —
     split out so tools/stress.py can ladder the df-capped inverted-index
     join on replicated corpora without re-tokenizing through the query."""
-    tf = tf.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    tf = materialize(tf, "corpus")
     norms = tf.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf")).cast("long").alias("nrm")
     )
@@ -1183,10 +1186,10 @@ def tfcos_allpairs_report(tf, df_cap: int = 50):
             ).alias("cos2_ppm"),
         )
     )
-    top = (
+    top = materialize(
         scored.orderBy(F.col("cos2_ppm").desc(), "doc_a", "doc_b")
-        .limit(20)
-        .localCheckpoint(eager=True)
+        .limit(20),
+        "bounded",
     )
     # bounded-domain: 20 rows — single-partition window is safe
     wr = Window.orderBy(F.col("cos2_ppm").desc(), "doc_a", "doc_b")
@@ -1271,10 +1274,10 @@ def q345_conformal_threshold(spark, sf_dir):
         ).alias("half"),
     )
     cal = ev.where(F.col("half") == 0)
-    by_val = (
+    by_val = materialize(
         cal.groupBy("event_type", "c")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("cnt")),
+        "bounded",
     )
     ncal = by_val.groupBy("event_type").agg(
         F.sum("cnt").cast("long").alias("n_cal")
@@ -1396,16 +1399,19 @@ def q346_permutation_test(spark, sf_dir):
         scaled_long(F.col("value"), 2).alias("c"),
     )
     obs = F.broadcast(
-        ev.agg(
-            F.sum("is_a").cast("long").alias("n_a"),
-            F.sum(F.when(F.col("is_a") == 1, F.col("c"))).cast("long").alias(
-                "s_a"
+        materialize(
+            ev.agg(
+                F.sum("is_a").cast("long").alias("n_a"),
+                F.sum(F.when(F.col("is_a") == 1, F.col("c")))
+                .cast("long")
+                .alias("s_a"),
+                F.sum(F.lit(1) - F.col("is_a")).cast("long").alias("n_b"),
+                F.sum(F.when(F.col("is_a") == 0, F.col("c")))
+                .cast("long")
+                .alias("s_b"),
             ),
-            F.sum(F.lit(1) - F.col("is_a")).cast("long").alias("n_b"),
-            F.sum(F.when(F.col("is_a") == 0, F.col("c"))).cast("long").alias(
-                "s_b"
-            ),
-        ).localCheckpoint(eager=True)
+            "bounded",
+        )
     )
     p_ppm = F.expr("n_a * 1000000 div (n_a + n_b)")
     lanes = (
@@ -1830,7 +1836,7 @@ def q349_style_affinity(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     stops = F.array(*[F.lit(w) for w in STOPWORDS_EN])
-    counts = (
+    counts = materialize(
         ensure_parallelism(docs)
         .select(
             "source",
@@ -1842,8 +1848,8 @@ def q349_style_affinity(spark, sf_dir):
             ).alias("word"),
         )
         .groupBy("source", "word")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.count("*").cast("long").alias("c")),
+        "corpus",
     )
     tots = counts.groupBy("source").agg(
         F.sum("c").cast("long").alias("tot")
@@ -2071,7 +2077,7 @@ def q351_corpus_saturation(spark, sf_dir):
     )
     # doc-cardinality rows with two consumers (max_id + decile rollup):
     # materialize once so the shingle pass runs once
-    per_doc = (
+    per_doc = materialize(
         occ.groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_sh"),
@@ -2080,8 +2086,8 @@ def q351_corpus_saturation(spark, sf_dir):
             )
             .cast("long")
             .alias("novel"),
-        )
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        ),
+        "corpus",
     )
     mx = F.broadcast(per_doc.agg(F.max("doc_id").alias("max_id")))
     return (
@@ -2160,17 +2166,20 @@ def q352_markov_steady_state(spark, sf_dir):
         F.lag("event_type").over(w).alias("from_type"),
         F.col("event_type").alias("to_type"),
     ).where(F.col("from_type").isNotNull())
-    counts = (
+    counts = materialize(
         steps.groupBy("from_type", "to_type")
-        .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("n")),
+        "bounded",
     )
     row_tot = counts.groupBy("from_type").agg(
         F.sum("n").cast("long").alias("rt")
     )
-    p = counts.join(F.broadcast(row_tot), "from_type").selectExpr(
-        "from_type", "to_type", "n * 1000000 div rt AS p_ppm"
-    ).localCheckpoint(eager=True)
+    p = materialize(
+        counts.join(F.broadcast(row_tot), "from_type").selectExpr(
+            "from_type", "to_type", "n * 1000000 div rt AS p_ppm"
+        ),
+        "bounded",
+    )
     states = counts.select(
         F.col("from_type").alias("state")
     ).union(counts.select("to_type")).distinct()
@@ -2195,10 +2204,10 @@ def q352_markov_steady_state(spark, sf_dir):
         nxt = states.join(nxt, "state", "left").select(
             "state", F.coalesce("pi", F.lit(0)).alias("pi")
         )
-        pi = (
+        pi = materialize(
             nxt.crossJoin(F.broadcast(nxt.agg(F.sum("pi").alias("sp"))))
-            .selectExpr("state", "pi * 1000000 div greatest(sp, 1) AS pi")
-            .localCheckpoint(eager=True)
+            .selectExpr("state", "pi * 1000000 div greatest(sp, 1) AS pi"),
+            "bounded",
         )
     out_mass = counts.groupBy(F.col("from_type").alias("state")).agg(
         F.sum("n").cast("long").alias("out_steps")
@@ -2297,10 +2306,10 @@ def q353_burstiness_fano(spark, sf_dir):
         "event_type",
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
     )
-    daily = (
+    daily = materialize(
         ev.groupBy("event_type", "day")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("c")),
+        "bounded",
     )
     n_days = F.broadcast(
         daily.select("day").distinct().agg(
@@ -2493,7 +2502,7 @@ def q355_diff_in_diff(spark, sf_dir):
     # the distinct-day spine is calendar-bounded tiny but used TWICE
     # (rank window + the nd count), each use re-running the full events
     # distinct — materialize it once
-    days = ev.select("day").distinct().localCheckpoint(eager=True)
+    days = materialize(ev.select("day").distinct(), "bounded")
     # bounded-domain: distinct DAYS (calendar-bounded) — single-
     # partition window is intentional and safe
     wd = Window.orderBy("day")
@@ -2638,7 +2647,7 @@ def q356_hll_union_overlap(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     h = hash60(F.col("tok"))
-    regs = (
+    regs = materialize(
         ensure_parallelism(docs)
         .select("source", F.explode(tokens(F.col("text"))).alias("tok"))
         .select(
@@ -2657,8 +2666,8 @@ def q356_hll_union_overlap(spark, sf_dir):
             .alias("rho"),
         )
         .groupBy("source", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-        .localCheckpoint(eager=True)
+        .agg(F.max("rho").alias("m_j")),
+        "bounded",
     )
 
     def estimate(grouped, keys):
@@ -2833,16 +2842,23 @@ def q357_aa_null_calibration(spark, sf_dir):
             % 2
         ).alias("g"),
     )
-    obs = ev.groupBy("event_type").agg(
-        F.sum(F.when(F.col("g") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.col("g") == 0, F.col("c"))).cast("long").alias("s_a"),
-        F.sum(F.when(F.col("g") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_b"),
-        F.sum(F.when(F.col("g") == 1, F.col("c"))).cast("long").alias("s_b"),
-    ).localCheckpoint(eager=True)
+    obs = materialize(
+        ev.groupBy("event_type").agg(
+            F.sum(F.when(F.col("g") == 0, 1).otherwise(0))
+            .cast("long")
+            .alias("n_a"),
+            F.sum(F.when(F.col("g") == 0, F.col("c")))
+            .cast("long")
+            .alias("s_a"),
+            F.sum(F.when(F.col("g") == 1, 1).otherwise(0))
+            .cast("long")
+            .alias("n_b"),
+            F.sum(F.when(F.col("g") == 1, F.col("c")))
+            .cast("long")
+            .alias("s_b"),
+        ),
+        "bounded",
+    )
     lanes = (
         ev.select(
             "event_type",

@@ -34,7 +34,7 @@ from adhesive_spark.operators.similarity import (
 )
 from adhesive_spark.operators.text import LANG_MARKERS, STOPWORDS_EN, text_profile
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 # --- shared SQL fragments (DuckDB dialect) -----------------------------------
 
@@ -1108,12 +1108,15 @@ def q157_semantic_drift(spark, sf_dir):
     )
     # labels x 2 rows; materialized once so the even/odd split does not
     # re-run the posexplode + double aggregation per side
-    vecs = sums.groupBy("label", "even").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "s"))),
-            lambda t: t.s.cast("double"),
-        ).alias("vec")
-    ).localCheckpoint(eager=True)
+    vecs = materialize(
+        sums.groupBy("label", "even").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "s"))),
+                lambda t: t.s.cast("double"),
+            ).alias("vec")
+        ),
+        "bounded",
+    )
     e = vecs.where(F.col("even")).select("label", F.col("vec").alias("ve"))
     o = vecs.where(~F.col("even")).select("label", F.col("vec").alias("vo"))
     counts = emb.groupBy("label").agg(
@@ -1262,7 +1265,7 @@ def q163_lsh_banding_eval(spark, sf_dir):
     _, band_rows = minhash_base_and_bands(docs, num_perm=64, bands=16)
     # plain self-join: band_rows reads the operator's shared id-keyed
     # signature exchange (kernel once), and the ENSURE-origin band
-    # shuffles stay AQE-skew-splittable (see minhash_lsh_pairs, r11)
+    # shuffles stay AQE-skew-splittable (see minhash_lsh_pairs)
     l, r = band_rows.alias("l"), band_rows.alias("r")
     cand = (
         l.join(
@@ -1427,7 +1430,7 @@ def q184_entity_resolution(spark, sf_dir):
         )
         .distinct()
     )
-    # star-CC default (r8 judge directive 6): O(log² n) rounds regardless
+    # star-CC default: O(log² n) rounds regardless
     # of chain depth — fuzzy word chains are exactly the deep-path shape
     # min-label is worst at; output-equal by operator test AND by the
     # q184-specific equality pytest (tests/test_graph_stateful.py).
@@ -1643,10 +1646,13 @@ def q206_neardup_evidence(spark, sf_dir):
     # aggregate and BOTH pair-join sides each re-ran the tokenize +
     # shingle explode (three kernel evaluations on top of the one
     # inside ngram_jaccard_pairs)
-    sh = docs.select(
-        F.col("doc_id"),
-        F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    sh = materialize(
+        docs.select(
+            F.col("doc_id"),
+            F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
+        ),
+        "corpus",
+    )
     dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("global_df"))
     shared = (
         pairs.join(sh.withColumnRenamed("doc_id", "id_a"), "id_a")
@@ -2251,7 +2257,7 @@ def q279_media_reduction_pipeline(spark, sf_dir):
     )
 
     media = synthesize_real_media(load_table(spark, sf_dir, "documents"))
-    media = media.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)  # feeds 3 transforms + input ledger
+    media = materialize(media, "corpus")  # feeds 3 transforms + input ledger
     out = (
         resample_wav(media, factor=2)
         .unionByName(downscale_ppm(media, factor=2))

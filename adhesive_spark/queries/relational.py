@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1747,19 +1747,22 @@ def q172_basket_lift(spark, sf_dir):
     # marginal joins, both self-join sides): materialize it once — the
     # same bytes its distinct shuffle already wrote (the q250
     # basket_affinity shape)
-    li = (
+    li = materialize(
         _t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     n_orders = li.select("l_orderkey").distinct().agg(
         F.count("*").alias("n_orders")
     )
     # catalog-sized marginal, joined twice
-    part_counts = li.groupBy("l_partkey").agg(
-        F.count("*").alias("n_part")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    part_counts = materialize(
+        li.groupBy("l_partkey").agg(
+            F.count("*").alias("n_part")
+        ),
+        "corpus",
+    )
     a, b = li.alias("a"), li.alias("b")
     pairs = (
         a.join(

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from adhesive_spark.operators.text import tokens
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 SCALE_QUERIES: dict = {}
 SCALE_ORACLES: dict = {}
@@ -389,9 +389,12 @@ def q221_lang_token_affinity(spark, sf_dir):
     # once and the three marginals are SUMS of it (identical counts by
     # associativity) — the four separate aggregates each re-ran the
     # corpus explode kernel
-    lt = toks.groupBy("lang", "tok").agg(
-        F.count("*").alias("n_lt")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    lt = materialize(
+        toks.groupBy("lang", "tok").agg(
+            F.count("*").alias("n_lt")
+        ),
+        "corpus",
+    )
     lg = lt.groupBy("lang").agg(F.sum("n_lt").alias("n_l"))
     tk = lt.groupBy("tok").agg(F.sum("n_lt").alias("n_t"))
     grand = lt.agg(F.sum("n_lt").alias("n_all"))
@@ -474,9 +477,12 @@ def q222_source_tv_drift(spark, sf_dir):
     ).where(F.col("tok") != "")
     # one tokenize+explode pass (q221 shape): materialize the
     # (source, tok) grain once; the marginals are sums of it
-    sc = toks.groupBy("source", "tok").agg(
-        F.count("*").alias("n_st")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    sc = materialize(
+        toks.groupBy("source", "tok").agg(
+            F.count("*").alias("n_st")
+        ),
+        "corpus",
+    )
     st = sc.groupBy("source").agg(F.sum("n_st").alias("n_s"))
     cc = sc.groupBy("tok").agg(F.sum("n_st").alias("n_c"))
     grand = sc.agg(F.sum("n_st").alias("n_all"))
@@ -666,10 +672,10 @@ def q224_tokenizer_apply(spark, sf_dir):
     # (lang, w, cnt) grain is materialized once; the greedy fold still
     # runs once per DISTINCT word and the fertility fold re-weights by
     # cnt (identical integer sums).
-    grain = (
+    grain = materialize(
         words.groupBy("lang", "w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "corpus",
     )
     distinct_w = grain.select("w").distinct()
     seg = distinct_w.withColumn("n_pieces", n_pieces_col(F.col("w")))
@@ -750,10 +756,10 @@ def q225_exact_median_twophase(spark, sf_dir):
     # consumers (cumulative walk, totals) each re-ran the full lineitem
     # scan + aggregate; the checkpoint is the collapsed (flag, bin, c)
     # table — bounded by the bucket domain, never the corpus.
-    hist = (
+    hist = materialize(
         binned.groupBy("l_returnflag", "bin")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("c")),
+        "bounded",
     )
     w = Window.partitionBy("l_returnflag").orderBy("bin")
     cum = hist.withColumn("cum", F.sum("c").over(w)).withColumn(
@@ -1012,7 +1018,7 @@ def q228_label_propagation(spark, sf_dir):
     # subtree, which would otherwise re-run the orders x lineitem join
     # six times in one plan (the checkpointed rows are the same bytes
     # the edge shuffle itself carries)
-    pairs = (
+    pairs = materialize(
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(
             F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias(
@@ -1022,8 +1028,8 @@ def q228_label_propagation(spark, sf_dir):
                 "b"
             ),
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     edges = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -1804,14 +1810,14 @@ def q236_source_minhash_matrix(spark, sf_dir):
     # materialize the signature table once: it is 20×32 rows by
     # contract, but the perm-keyed SELF-join evaluated it twice — each
     # evaluation re-running the corpus tokenize + distinct + 32-perm min
-    sig = (
+    sig = materialize(
         base.crossJoin(F.broadcast(coeffs))
         .groupBy("source", "perm")
         .agg(
             F.min((F.col("h") * F.col("a") + F.col("b")) % F.lit(_MERSENNE))
             .alias("mh")
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     s2 = sig.select(
         F.col("source").alias("source_b"),

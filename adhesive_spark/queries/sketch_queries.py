@@ -27,7 +27,7 @@ from adhesive_spark.operators.sketches import (
 )
 from adhesive_spark.operators.text import tokens
 from adhesive_spark.sources.registry import load_table
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 SKETCH_QUERIES: dict = {}
 SKETCH_ORACLES: dict = {}
@@ -88,10 +88,10 @@ def q242_cms_heavyhitters(spark, sf_dir):
     # it WEIGHTED (sum of counts per counter — integer-identical to
     # counting the raw stream) and the exact top-10 is a sort of the
     # same grain, where sketch/top/probe each re-ran the corpus explode
-    counts = (
+    counts = materialize(
         toks.groupBy("tok")
-        .agg(F.count("*").cast("long").alias("true_cnt"))
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .agg(F.count("*").cast("long").alias("true_cnt")),
+        "corpus",
     )
     sketch = cms_build(counts, "tok", weight_col="true_cnt")
     top = (
@@ -194,15 +194,18 @@ def q243_bm25_retrieval(spark, sf_dir):
     # aggregate AND the scoring pass each re-ran the tokenize+explode
     # kernel plus the doc aggregate; the checkpoint holds one narrow
     # row per document (the same bytes its shuffle writes)
-    per_doc = toked.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("dl"),
-        *[
-            F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
-            .cast("long")
-            .alias(f"tf{i}")
-            for i, t in enumerate(_BM25_TERMS)
-        ],
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    per_doc = materialize(
+        toked.groupBy("doc_id").agg(
+            F.count("*").cast("long").alias("dl"),
+            *[
+                F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
+                .cast("long")
+                .alias(f"tf{i}")
+                for i, t in enumerate(_BM25_TERMS)
+            ],
+        ),
+        "corpus",
+    )
     stats = per_doc.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.expr("CAST(sum(dl) * 1000 div count(*) AS BIGINT)").alias(
@@ -314,9 +317,12 @@ def q244_pmi_collocations(spark, sf_dir):
     # one bigram-explode pass (q221 shape): the (x, y) grain is
     # materialized once; the slot marginals and the total are SUMS of
     # it, where four separate aggregates each re-ran the zip/explode
-    pair = bi.groupBy("x", "y").agg(
-        F.count("*").cast("long").alias("c_xy")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    pair = materialize(
+        bi.groupBy("x", "y").agg(
+            F.count("*").cast("long").alias("c_xy")
+        ),
+        "corpus",
+    )
     left = pair.groupBy("x").agg(F.sum("c_xy").cast("long").alias("c_x"))
     right = pair.groupBy("y").agg(F.sum("c_xy").cast("long").alias("c_y"))
     total = pair.agg(F.sum("c_xy").cast("long").alias("n_bi"))
@@ -416,7 +422,7 @@ def q245_kcore_peel(spark, sf_dir):
     # blow-up; 15 s -> ~3 s at sf0.01). Same policy as q131's oriented
     # edge list: at 100 TB the per-round edge list is the artifact an
     # iterative graph job persists anyway.
-    edges = li.localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    edges = materialize(li, "corpus")
     out = []
     for rnd in range(1, _KCORE_ROUNDS + 1):
         deg = (
@@ -426,17 +432,20 @@ def q245_kcore_peel(spark, sf_dir):
             .agg(F.count("*").cast("long").alias("d"))
         )
         keep = deg.where(F.col("d") >= _KCORE_K).select("node")
-        edges = (
-            edges.join(
-                keep.withColumnRenamed("node", "u").hint("broadcast"),
-                "u",
-                "semi",
-            ).join(
-                keep.withColumnRenamed("node", "v").hint("broadcast"),
-                "v",
-                "semi",
-            )
-        ).select("u", "v").localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        edges = materialize(
+            (
+                edges.join(
+                    keep.withColumnRenamed("node", "u").hint("broadcast"),
+                    "u",
+                    "semi",
+                ).join(
+                    keep.withColumnRenamed("node", "v").hint("broadcast"),
+                    "v",
+                    "semi",
+                )
+            ).select("u", "v"),
+            "corpus",
+        )
         stats = edges.agg(
             F.lit(rnd).cast("long").alias("round"),
             F.count("*").cast("long").alias("n_edges"),
@@ -552,12 +561,12 @@ def q246_pq_ann(spark, sf_dir):
     # centroids x subspaces rows; evaluated once for its two broadcast
     # consumers (corpus coding + the per-query ADC table) instead of
     # re-running the pruned scan + explode per consumer
-    codebook = (
+    codebook = materialize(
         sub.where(F.col("vec_id") < _PQ_CENTROIDS)
         .select(
             F.col("vec_id").alias("cid"), "s", F.col("sv").alias("cv")
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bounded",
     )
     l2sq = (
         "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
@@ -842,13 +851,13 @@ def q248_ivfpq_ann(spark, sf_dir):
     )
     # n_lists rows; evaluated once for its two broadcast consumers
     # (corpus coarse-assignment + query probing)
-    coarse = (
+    coarse = materialize(
         emb.where(
             (F.col("vec_id") >= _PQ_CENTROIDS)
             & (F.col("vec_id") < _PQ_CENTROIDS + _IVFPQ_LISTS)
         )
-        .select(F.col("vec_id").alias("list_id"), F.col("mv").alias("lv"))
-        .localCheckpoint(eager=True)
+        .select(F.col("vec_id").alias("list_id"), F.col("mv").alias("lv")),
+        "bounded",
     )
     corpus = emb.where(F.col("vec_id") >= _PQ_CENTROIDS + _IVFPQ_LISTS)
     w_list = Window.partitionBy("vec_id").orderBy("ldist", "list_id")
@@ -881,10 +890,10 @@ def q248_ivfpq_ann(spark, sf_dir):
         ).alias("e"),
     ).select("vec_id", F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
     # as q246: one evaluation for the coding + ADC broadcasts
-    codebook = (
+    codebook = materialize(
         sub.where(F.col("vec_id") < _PQ_CENTROIDS)
-        .select(F.col("vec_id").alias("cid"), "s", F.col("sv").alias("cv"))
-        .localCheckpoint(eager=True)
+        .select(F.col("vec_id").alias("cid"), "s", F.col("sv").alias("cv")),
+        "bounded",
     )
     l2sq = l2full
     w_assign = Window.partitionBy("vec_id", "s").orderBy("dist", "cid")
@@ -1159,7 +1168,7 @@ def q250_basket_affinity(spark, sf_dir):
     # materialize it once so the events scan + props regexp runs once —
     # the checkpointed rows are the same basket-bounded bytes the pair
     # self-join shuffles anyway
-    clicks = (
+    clicks = materialize(
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "click")
         .select(
@@ -1168,8 +1177,8 @@ def q250_basket_affinity(spark, sf_dir):
             .cast("long")
             .alias("item"),
         )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        .distinct(),
+        "corpus",
     )
     a, b = clicks.alias("a"), clicks.alias("b")
     pairs = (
@@ -1182,9 +1191,12 @@ def q250_basket_affinity(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("c_xy"))
     )
     # item-cardinality rows, broadcast twice (x and y attach): compute once
-    pop = clicks.groupBy("item").agg(
-        F.count("*").cast("long").alias("c_i")
-    ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+    pop = materialize(
+        clicks.groupBy("item").agg(
+            F.count("*").cast("long").alias("c_i")
+        ),
+        "corpus",
+    )
     n_users = clicks.select("user_id").distinct().agg(
         F.count("*").cast("long").alias("n_users")
     )
@@ -1333,9 +1345,12 @@ def q252_chisq_independence(spark, sf_dir):
     )
     # |types| x 2 rows, but the subtree is a full corpus aggregate and
     # has FOUR consumers (rows, cols, total, terms) — materialize once
-    cells = ev.groupBy("event_type", "is_weekend").agg(
-        F.count("*").cast("long").alias("o")
-    ).localCheckpoint(eager=True)
+    cells = materialize(
+        ev.groupBy("event_type", "is_weekend").agg(
+            F.count("*").cast("long").alias("o")
+        ),
+        "bounded",
+    )
     rows = cells.groupBy("event_type").agg(
         F.sum("o").cast("long").alias("r")
     )
@@ -1461,12 +1476,12 @@ def q253_delta_join_view(spark, sf_dir):
     # different association), so it is derived from the four
     # materialized part rows instead of re-running every delta join
     # inside a union (which doubled all four joins: 9 orders scans)
-    part_sigs = (
+    part_sigs = materialize(
         _sig(v_old, "v_old")
         .unionAll(_sig(d1, "delta_a"))
         .unionAll(_sig(d2, "delta_b"))
-        .unionAll(_sig(d3, "delta_ab"))
-        .localCheckpoint(eager=True)
+        .unionAll(_sig(d3, "delta_ab")),
+        "bounded",
     )
     inc_sig = part_sigs.agg(
         F.lit("incremental").alias("part"),
@@ -1633,17 +1648,17 @@ def q255_bitmap_index(spark, sf_dir):
     """
     t1, t2 = "hash", "join"
     docs = load_table(spark, sf_dir, "documents")
-    toked = (
+    toked = materialize(
         docs.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
         )
         .where(F.col("tok").isin(t1, t2))
-        .distinct()
+        .distinct(),
         # feeds FOUR consumers (both word maps, per-token counts, the
         # exact AND audit) — materialize the tiny (doc, tok) presence
         # set once or Catalyst re-derives the corpus explode per
         # consumer (23 s -> ~4 s at sf0.01; q131/q245 policy)
-        .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        "corpus",
     )
     words = toked.select(
         "tok",

@@ -9,6 +9,7 @@ formats are delegated to the embedded engine. Here both are Spark-native:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -81,25 +82,41 @@ def ensure_parallelism(
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-def _corpus_ckpt_level():
-    from pyspark import StorageLevel
+#: Storage level of each materialization grain; ``None`` is the
+#: default local-checkpoint level. See :func:`materialize`.
+_GRAIN_LEVELS = {"corpus": StorageLevel.MEMORY_AND_DISK, "bounded": None}
 
-    return StorageLevel.MEMORY_AND_DISK
 
+def materialize(df: DataFrame, grain: str) -> DataFrame:
+    """Eagerly materialize ``df`` into executor storage and truncate its
+    lineage: the one materialization boundary of the package.
 
-#: Storage level for localCheckpoints of CORPUS-SCALED grains (rows
-#: proportional to input docs / events / edges / tokens). The default
-#: local-checkpoint level stores DESERIALIZED JVM objects, and Spark's
-#: disk-block read path re-inflates evicted blocks as values
-#: (``maybeCacheDiskValuesInMemory``) — at the 10 000× stress rung that
-#: working set OOMed a 48 g heap on link_prediction. PySpark's
-#: MEMORY_AND_DISK maps to the JVM's SERIALIZED memory+disk level: blocks
-#: are ~an order of magnitude smaller, overflow to disk, and re-cache as
-#: bounded BYTES. Contractually tiny tables (rung spines, K×K matrices,
-#: centroid sets, per-source rollups) keep the plain default —
-#: deserialized reads are cheaper and their bytes are bounded by the
-#: schema, not the corpus.
-CORPUS_CKPT_LEVEL = _corpus_ckpt_level()
+    ``grain`` names how the rows scale and picks the storage level:
+
+    - ``"corpus"``: rows proportional to the input docs / events /
+      edges / tokens. PySpark's ``MEMORY_AND_DISK`` maps to the JVM's
+      SERIALIZED memory+disk level. The default local-checkpoint level
+      stores DESERIALIZED JVM objects, and Spark's disk-block read path
+      re-inflates evicted blocks as values
+      (``maybeCacheDiskValuesInMemory``): at the 10 000x stress rung
+      (590 M edges) that working set, not the compute, OOMed a 48 g
+      heap on link_prediction. Serialized blocks
+      are about an order of magnitude smaller, overflow to disk and
+      re-cache as bounded BYTES. ``DISK_ONLY`` was measured too: ~1 s
+      of disk round-trip per bench rep on q263.
+    - ``"bounded"``: contractually tiny tables (rung spines, K x K
+      matrices, centroid sets, per-source rollups) keep the default
+      local-checkpoint level. Deserialized reads are cheaper, and their
+      bytes are bounded by the schema, not the corpus.
+
+    A local checkpoint rather than ``cache()``: the same physical
+    boundary, but the blocks are owned by the RDD and reclaimed by the
+    ContextCleaner when the caller's plan is dropped, so repeated calls
+    don't accumulate entries in the session cache manager. Like every
+    local checkpoint it truncates lineage: an executor loss during the
+    query fails the job instead of recomputing the lost blocks.
+    """
+    return df.localCheckpoint(eager=True, storageLevel=_GRAIN_LEVELS[grain])
 
 
 def register_tables(

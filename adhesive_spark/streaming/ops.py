@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from adhesive_spark.sources.registry import CORPUS_CKPT_LEVEL
+from adhesive_spark.sources.registry import materialize
 
 
 def tumbling_counts(
@@ -336,10 +336,10 @@ def streaming_incremental_dedup(
         # a batch holding several copies of the same (id, text) row would
         # match keep once PER COPY — collapse to one survivor per
         # fingerprint, exactly what the batch twin dedup_exact emits
-        survivors = (
+        survivors = materialize(
             b.join(keep, [id_col, "__fp"])
-            .dropDuplicates(["__fp"])
-            .localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+            .dropDuplicates(["__fp"]),
+            "corpus",
         )
         survivors.drop("__fp").write.mode("overwrite").parquet(
             f"{output_path}/__epoch={epoch_id}"
@@ -479,7 +479,7 @@ def streaming_quality_router(
     LAST so its ``_SUCCESS`` is the epoch's commit marker (readers of
     either side trust only accept-committed epochs; a crash between
     the two writes replays into an overwrite). The batch is
-    localCheckpoint'ed once so scoring runs once, not once per sink.
+    materialized once so scoring runs once, not once per sink.
     At 100 TB each side is a straight partitioned append — no
     shuffle, no state store, and back-pressure is per-epoch file IO.
     """
@@ -490,9 +490,12 @@ def streaming_quality_router(
         epochs = _committed_epochs(spark, accept_path)
         if epochs and epochs[-1] >= epoch_id:
             return  # replayed micro-batch: epoch already committed
-        scored = batch_df.withColumn(
-            "quality", quality_score(F.col(text_col))
-        ).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        scored = materialize(
+            batch_df.withColumn(
+                "quality", quality_score(F.col(text_col))
+            ),
+            "corpus",
+        )
         ok = F.col("quality") >= min_quality
         scored.where(~ok).withColumn(
             "reject_reason", F.lit("low_quality")
@@ -567,7 +570,7 @@ def compact_streamed_index(
     if spark.catalog.tableExists(table):
         # materialize the current base OUT of the table before the
         # overwrite (reading the table while overwriting it is illegal)
-        base = spark.table(table).localCheckpoint(eager=True, storageLevel=CORPUS_CKPT_LEVEL)
+        base = materialize(spark.table(table), "corpus")
         merged = base.unionByName(fresh)
     else:
         merged = fresh

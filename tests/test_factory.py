@@ -215,6 +215,37 @@ def test_strict_deterministic_order_independent(sess):
         sess.sql("SELECT ford('x')").collect()
 
 
+@pytest.mark.parametrize(
+    "before, after",
+    [
+        ("", "DETERMINISTIC STRICT"),
+        ("STRICT", "DETERMINISTIC"),
+        ("DETERMINISTIC", "STRICT"),
+        ("STRICT DETERMINISTIC", ""),
+    ],
+)
+@pytest.mark.parametrize(
+    "returns, return_type",
+    [("BIGINT", "BIGINT"), ("TABLE(a BIGINT, b STRING)", "a BIGINT, b STRING")],
+)
+def test_modifiers_on_either_side_of_language(before, after, returns, return_type):
+    d = parse_create_function(
+        f"CREATE FUNCTION fmod(BIGINT) RETURNS {returns} {before} "
+        f"LANGUAGE PYTHON {after} AS 'return arg0'"
+    )
+    assert (d.return_type, d.language) == (return_type, "PYTHON")
+    assert d.deterministic and d.strict
+    assert d.returns_table == returns.startswith("TABLE")
+
+
+@pytest.mark.parametrize("body", ["$$return arg0$$ garbage", "'return arg0' garbage"])
+def test_trailing_content_after_body_rejected(body):
+    with pytest.raises(DdlParseError, match="trailing content"):
+        parse_create_function(
+            f"CREATE FUNCTION ftrail(BIGINT) RETURNS BIGINT AS {body}"
+        )
+
+
 def test_strict_rejected_for_jvm_languages(sess):
     with pytest.raises(DdlParseError, match="STRICT"):
         sess.sql(

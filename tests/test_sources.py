@@ -10,7 +10,7 @@ from adhesive_spark.sources.formats import (
     write_any,
     write_bucketed_table,
 )
-from adhesive_spark.sources.registry import load_table
+from adhesive_spark.sources.registry import load_table, materialize
 
 
 @pytest.fixture(scope="module")
@@ -454,3 +454,29 @@ def test_python_datasource_filter_pushdown(spark):
     b = load(False)
     assert b.filter("doc_id < 10").count() == 10
     assert b.count() == 1000
+
+
+@pytest.mark.parametrize(
+    "grain, level", [("corpus", "Serialized"), ("bounded", "Deserialized")]
+)
+def test_materialize_checkpoints_eagerly_at_grain_level(spark, grain, level):
+    jsc = spark.sparkContext._jsc.sc()
+    df = spark.range(50).withColumn("sq", F.col("id") * F.col("id"))
+    df = df.where("id % 3 = 0")
+    before = {info.id() for info in jsc.getRDDStorageInfo()}
+    out = materialize(df, grain)
+    # lineage already cut: the plan is the stored RDD and nothing below it
+    plan = out._jdf.queryExecution().logical()
+    assert plan.nodeName() == "LogicalRDD" and plan.children().isEmpty()
+    stored = [
+        info.storageLevel().description().split()
+        for info in jsc.getRDDStorageInfo()
+        if info.id() not in before
+    ]
+    assert stored and all(level in words for words in stored)
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_materialize_rejects_unknown_grain(spark):
+    with pytest.raises(KeyError):
+        materialize(spark.range(1), "reliable")
